@@ -566,8 +566,10 @@ object CleanPipeline {
         .select("doc1", "doc2")
       val (allPairs, sketch) = withSemanticPairs(corpus, lexPairs, embeddings, cfg, idCol)
       sketchHandle = sketch
-      // durable per-iteration labels (a lost executor re-reads parquet);
-      // scratch dropped below once the stage table is the durable copy
+      // small graphs solve on the driver with no iteration tables; above
+      // the driver edge limit the loop keeps durable per-iteration labels
+      // (a lost executor re-reads parquet), scratch dropped below once the
+      // stage table is the durable copy
       val clusters = ConnectedComponents.cluster(
         allPairs, corpus.select(col(idCol).as("doc_id")),
         reliableCheckpointDir = Some(s"$workDir/_cc_scratch"))

@@ -20,15 +20,24 @@ import org.apache.spark.storage.StorageLevel
   * rounds. Labels only decrease and stay inside the component, so the
   * fixpoint is the component-min label.
   *
-  * Durability: each iteration materializes to truncate lineage (plan growth
-  * is the classic failure of iterative DataFrame jobs). By default that is
-  * localCheckpoint — executor-local blocks, lost on executor death. For
-  * long cluster runs pass `reliableCheckpointDir`: EVERY iteration's labels
-  * are then a parquet table (written + read back), so any lost partition
+  * Path choice: a graph of at most `driverEdgeLimit` edges is solved by a
+  * bounded driver-side union-find (no iteration, no iteration tables);
+  * only a larger graph, or `driverEdgeLimit = 0`, runs the loop below.
+  *
+  * Durability of the loop: each iteration materializes to truncate lineage
+  * (plan growth is the classic failure of iterative DataFrame jobs). By
+  * default that is localCheckpoint — executor-local blocks, lost on
+  * executor death. `reliableCheckpointDir` says where the loop's
+  * per-iteration label tables live instead: EVERY iteration's labels are
+  * then a parquet table (written + read back), so any lost partition
   * recomputes from files rather than from dead executors' blocks — a lost
   * executor costs a re-read, not the job. The previous iteration's table
   * is deleted once the next one is committed, so the scratch dir holds at
-  * most two label tables (SURVEY.md §4 physical-execution checklist).
+  * most two label tables (SURVEY.md §4 physical-execution checklist). It
+  * does not choose the path: the driver fast path writes no iteration
+  * tables, its labels come from driver memory (a lost executor recomputes
+  * them from the driver), and resumable callers commit the result as a
+  * stage table anyway.
   *
   * Non-convergence is an ERROR: silently returning non-minimal labels is
   * the "recall dies silently" failure mode — we throw instead.
@@ -41,24 +50,29 @@ object ConnectedComponents {
     *                bounds reachable diameter at ~2^maxIter — hitting it
     *                means something is wrong, so we THROW rather than
     *                return non-minimal labels
-    * @param reliableCheckpointDir if set, every iteration's labels live in
-    *                a parquet table under this scratch dir (survives
-    *                executor loss, unlike localCheckpoint); at most two
-    *                tables exist at a time
+    * @param reliableCheckpointDir where the LOOP keeps its per-iteration
+    *                labels: a parquet table under this scratch dir per
+    *                iteration (survives executor loss, unlike
+    *                localCheckpoint); at most two tables exist at a time.
+    *                Unused on the driver fast path, which writes none
     * @param driverEdgeLimit edge count at or below which the components are
     *                solved by a BOUNDED driver-side union-find instead of
-    *                the iterative join loop (round 8): the pair count is
-    *                already in hand from forcing the cache, a <= 1M-edge
-    *                collect is <= ~16 MB of longs — the bounded-collect
-    *                contract of the IVF index build — and union-find labels
-    *                a graph this size in milliseconds where the loop pays
-    *                ~25 near-empty scheduling stages (measured 5.2 s at the
-    *                200k-file bench leg, almost all stage overhead). The
-    *                label semantics are identical (component-min labels are
-    *                unique); the distributed loop remains the >limit path
-    *                at cluster scale and is spec-pinned equal. 0 disables;
-    *                reliableCheckpointDir also disables it (a caller that
-    *                asked for durable per-iteration tables gets them).
+    *                the iterative join loop: the pair count is already in
+    *                hand from forcing the cache, and union-find needs no
+    *                Spark stage per round where the loop pays ~25
+    *                near-empty scheduling stages (measured 5.2 s at the
+    *                200k-file bench leg, almost all stage overhead).
+    *                Driver cost at the 1M default (measured on 1M-edge
+    *                chain and random graphs over 1M nodes, 2 GB heap,
+    *                local[2]): a peak of ~340 MB of live heap above the
+    *                baseline — the collected `Row`s, the boxed union-find
+    *                maps and the label rows — and 3-5 s of wall; the
+    *                returned frame keeps the ~100 MB of label rows alive
+    *                while it is referenced. The label semantics are
+    *                identical (component-min labels are unique); the
+    *                distributed loop remains the >limit path at cluster
+    *                scale and is spec-pinned equal. Only 0 forces the loop
+    *                for every graph; `reliableCheckpointDir` does not.
     * @return (doc_id, cluster_id) where cluster_id = min doc_id in component
     */
   def cluster(pairs: DataFrame, allDocs: DataFrame, maxIter: Int = 20,
@@ -99,13 +113,17 @@ object ConnectedComponents {
     // forces the p0 cache before the loop re-reads it every iteration.
     val nEdges = p0.count()
 
-    if (nEdges <= driverEdgeLimit && reliableCheckpointDir.isEmpty) {
+    if (nEdges <= driverEdgeLimit) {
       // Small-graph fast path: solve on the driver. The collect is bounded
-      // by driverEdgeLimit BY CONSTRUCTION (scaladoc above); min-label
-      // resolution via union-find is exact and deterministic, so the
-      // output is identical to the loop's fixpoint.
+      // by driverEdgeLimit (scaladoc above); min-label resolution via
+      // union-find is exact and deterministic, so the output is identical
+      // to the loop's fixpoint.
       val edgeArr = p0.select(col("src"), col("dst"))
         .collect()
+      require(edgeArr.length <= driverEdgeLimit,
+        s"driver union-find collected ${edgeArr.length} edges, above " +
+          s"driverEdgeLimit = $driverEdgeLimit (the pair table changed " +
+          "between count and collect)")
       val parent = new java.util.HashMap[Long, Long](edgeArr.length * 2)
       def find(x0: Long): Long = {
         var x = x0

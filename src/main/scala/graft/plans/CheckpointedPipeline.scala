@@ -75,9 +75,11 @@ class CheckpointedPipeline(
       }
     }
     val clusters = stage("clusters", fp, log) {
-      // durable per-iteration labels under the work dir: on a real cluster
-      // a lost executor re-reads parquet instead of killing the stage
-      // (the `_`-prefixed scratch dir is invisible to parquet readers)
+      // graphs up to the driver edge limit solve on the driver and write no
+      // iteration tables; above it the loop keeps durable per-iteration
+      // labels under the work dir, so on a real cluster a lost executor
+      // re-reads parquet instead of killing the stage (the `_`-prefixed
+      // scratch dir is invisible to parquet readers)
       ConnectedComponents.cluster(pairs, docs.select(col("doc_id")),
         reliableCheckpointDir = Some(s"$workDir/_cc_scratch"))
     }

@@ -69,10 +69,12 @@ class ConnectedComponentsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
     val edges = (0L until 20L).map(i => (i * 3, i * 3 + 3)).toDF("doc1", "doc2")
     val docs = (0L to 60L).toDF("doc_id")
-    val a = ConnectedComponents.cluster(edges, docs)
+    // driverEdgeLimit = 0: the per-iteration parquet tables belong to the
+    // loop; a graph this small would otherwise take the driver fast path
+    val a = ConnectedComponents.cluster(edges, docs, driverEdgeLimit = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = ConnectedComponents.cluster(edges, docs,
-        reliableCheckpointDir = Some(dir))
+        reliableCheckpointDir = Some(dir), driverEdgeLimit = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b)
     // every iteration is parquet-backed AND superseded tables are cleaned:
@@ -80,5 +82,51 @@ class ConnectedComponentsSpec extends SparkSpec {
     val written = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.startsWith("cc_labels_iter_"))
     assert(written.length == 1, written.mkString(","))
+  }
+
+  test("reliableCheckpointDir does not force the loop: a small graph takes the fast path") {
+    val dir = java.nio.file.Files.createTempDirectory("cc_fast").toString
+    val edges = ((0L until 20L).map(i => (i * 3, i * 3 + 3)) ++
+      Seq((100L, 101L), (101L, 102L), (90L, 102L))).toDF("doc1", "doc2")
+    val docs = (0L to 110L).toDF("doc_id")
+    val fast = ConnectedComponents.cluster(edges, docs, reliableCheckpointDir = Some(dir))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val loop = ConnectedComponents.cluster(edges, docs, driverEdgeLimit = 0L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(fast == loop)
+    // the fast path writes no iteration tables
+    val written = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith("cc_labels_iter_"))
+    assert(written.isEmpty, written.mkString(","))
+  }
+
+  test("CheckpointedPipeline clusters stage equals the loop over its own pairs stage; rerun resumes") {
+    val cfg = graft.core.MinHashConfig(shingleSize = 3, signatureSize = 64, nBandRows = 4,
+      seed = 13, threshold = 0.5)
+    val work = java.nio.file.Files.createTempDirectory("cc_pipeline").toString
+    val docs = graft.sources.CorpusGen.withDocIds(
+      graft.sources.CorpusGen.sourceFiles(spark, 300)).cache()
+    val stages = Seq("signatures", "candidates", "pairs", "clusters")
+    val (c1, log1) = new graft.plans.CheckpointedPipeline(spark, cfg, work).run(docs)
+    assert(log1.computed.toSeq == stages, log1.toString)
+    val clusters = c1.select("doc_id", "cluster_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = spark.read.parquet(s"$work/pairs")
+    assert(pairs.count() > 0L, "corpus must yield dup pairs for the comparison to mean anything")
+    val loop = ConnectedComponents.cluster(pairs, docs.select("doc_id"), driverEdgeLimit = 0L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(clusters == loop)
+    assert(!new java.io.File(s"$work/_cc_scratch").exists())
+
+    // a second run resumes every stage, under byte-identical tags
+    def tags: Seq[String] = stages.map(st => new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(work, st, "_graft_tag")), "UTF-8"))
+    val tags1 = tags
+    val (c2, log2) = new graft.plans.CheckpointedPipeline(spark, cfg, work).run(docs)
+    assert(log2.computed.isEmpty && log2.skipped.toSeq == stages, log2.toString)
+    assert(tags == tags1)
+    assert(c2.select("doc_id", "cluster_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == clusters)
+    docs.unpersist()
   }
 }
