@@ -193,20 +193,34 @@ object MinHashPipeline {
   /** Optional verification stage (north-star): exact Jaccard over distinct
     * shingle-hash sets — the semantics of the reference's dead-code
     * array_similarity (/root/reference/src/MPI/utils.c:65-77, O15b), but on
-    * deduplicated sets (Q12) with a sorted-merge intersection.
+    * deduplicated sets (Q12) with a sorted-merge intersection. The shingle
+    * sets stay cached after the returned frame is consumed; a caller that
+    * must release them passes its own [[shingleSets]] to the overload.
     */
-  def exactJaccardPairs(cands: DataFrame, docs: DataFrame, cfg: MinHashConfig): DataFrame = {
+  def exactJaccardPairs(cands: DataFrame, docs: DataFrame, cfg: MinHashConfig): DataFrame =
+    exactJaccardPairs(cands, shingleSets(docs, cfg))
+
+  /** The persisted (doc_id, shingle_set) frame [[exactJaccardPairs]] joins
+    * on; unpersisting it once the pairs are materialized is the caller's.
+    */
+  def shingleSets(docs: DataFrame, cfg: MinHashConfig): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     // persisted: consumed by BOTH join sides — an un-persisted self-join
     // subtree recomputes the shingle-hash kernel per side (CLAUDE.md)
-    val sets = Spread(docs.select(col("doc_id").cast("long"), col("content").cast("string")))
+    Spread(docs.select(col("doc_id").cast("long"), col("content").cast("string")))
       .as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, c) => (id, SignatureKernel.shingleHashSet(if (c == null) "" else c, cfg)) }
       }
       .toDF("doc_id", "shingle_set")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** [[exactJaccardPairs]] over shingle sets from [[shingleSets]]. */
+  def exactJaccardPairs(cands: DataFrame, sets: DataFrame): DataFrame = {
+    val spark = sets.sparkSession
+    import spark.implicits._
     val l = sets.select(col("doc_id").as("doc1"), col("shingle_set").as("set1"))
     val r = sets.select(col("doc_id").as("doc2"), col("shingle_set").as("set2"))
     // typed map (not a UDF): the sorted-merge intersection is a tight

@@ -70,9 +70,14 @@ class CheckpointedPipeline(
     // shingle-hash sets for every candidate pair (the reference's dead-code
     // array_similarity semantics, O15b)
     if (verifyExactJaccard) {
+      var sets: Option[DataFrame] = None
       stage("jaccard", fp, log) {
-        MinHashPipeline.exactJaccardPairs(cands, docs, cfg)
+        sets = Some(MinHashPipeline.shingleSets(docs, cfg))
+        MinHashPipeline.exactJaccardPairs(cands, sets.get)
       }
+      // the committed table is read back from parquet: the cached shingle
+      // sets have no consumer left
+      sets.foreach(_.unpersist())
     }
     val clusters = stage("clusters", fp, log) {
       // graphs up to the driver edge limit solve on the driver and write no
