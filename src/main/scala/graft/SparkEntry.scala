@@ -167,11 +167,8 @@ object SparkEntry {
     val cfg = CleanPipeline.Config(maxLineDocFreq = 20L, tokensPerShard = 50000L)
     val surv = CleanPipeline.nearDupInputs(
       documents(s, dir).select(col("doc_id"), col("text")), cfg)
-    val emb = embeddings(s, dir)
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-        size(col("embedding")) > 0)
-      .join(surv.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
+    val emb = CleanPipeline.survivorEmbeddings(
+      embeddings(s, dir).select(col("vec_id").as("doc_id"), col("embedding")), surv)
     Similarity.lshSketchFrame(emb, dim = 64, nTables = 12, nProbes = 8)
   }
 

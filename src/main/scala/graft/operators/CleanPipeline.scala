@@ -5,32 +5,33 @@ import graft.functions.TextAnalysis
 import graft.plans.{CheckpointedPipeline, StageStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The composed end-to-end training-data cleaning recipe (the C4/RefinedWeb
-  * shape), built entirely from this library's operators:
+  * shape), built entirely from this library's operators and written once,
+  * as an ordered list of steps (`recipe`; each step's comment says what it
+  * does and why):
   *
-  *   1. corpus-wide boilerplate-LINE removal ([[Dedup.stripBoilerplateLines]])
-  *   2. quality filtering (token count + punctuation ratio,
-  *      [[TextAnalysis.withQualityColumns]]) — BEFORE redaction, so PII
-  *      placeholders never distort the ratios (and see the in-code CSE
-  *      note: fusing the redact chain into the quality projection makes
-  *      Catalyst inline it per column, measured 3x slower)
-  *   3. PII redaction of the survivors ([[TextAnalysis.redactPii]])
-  *   4. exact dedup (sha-256 digest groups, [[Dedup.exactDedup]])
-  *   5. near-dup dedup (MinHash/LSH pairs — optionally UNIONED with
-  *      embedding-cosine semantic pairs — -> connected components ->
-  *      min-id representatives, [[MinHashPipeline]] / [[Similarity]] /
-  *      [[ConnectedComponents]] / [[Dedup.keepRepresentatives]])
-  *   6. deterministic split + token-budget sharding ([[Corpus]])
+  *   line_clean -> quality -> redact -> exact [-> decontam]
+  *     [-> exact_spans] -> neardup -> clean_corpus
   *
-  * Each stage is individually oracle- or parity-pinned; this runner only
-  * composes them (plus the stage-count bookkeeping a production run logs),
+  * Optional steps are in the list only when enabled. Each stage is
+  * individually oracle- or parity-pinned; the recipe only composes them,
   * so its scale story is exactly the sum of its parts: narrow scans,
-  * digest-keyed shuffles, one LSH bucket shuffle, O(log D) label rounds,
-  * a broadcast-able representative semi-join, and the two-pass prefix sum.
+  * digest-keyed shuffles, one LSH bucket shuffle, O(log D) label rounds, a
+  * broadcast-able representative semi-join, and the two-pass prefix sum.
   *
-  * Cache lifetime is CALLER-owned (the repo-wide operator contract):
-  * clearCache()/unpersist the returned frame when done.
+  * Two executors run the list: a cache executor ([[run]],
+  * [[nearDupInputs]]) persists and counts each step's output and releases
+  * the previous one; a [[StageStore]] executor ([[runCheckpointed]])
+  * commits each output as a stage table. A step's `build` registers every
+  * cache it makes (operator outputs, self-join inputs); the executor
+  * releases them once the output is materialized, in a `finally`, so a
+  * failing step leaks nothing. An output that is itself an operator's
+  * cache (a rename of it) is owned like any output. [[run]] and
+  * [[nearDupInputs]] leave exactly one cache, their persisted and
+  * materialized result, which the CALLER owns (unpersist it when done, the
+  * repo-wide operator contract); [[runCheckpointed]] leaves none.
   */
 object CleanPipeline {
 
@@ -103,9 +104,8 @@ object CleanPipeline {
     * reports next to its output. `afterLineClean` separates all-boilerplate
     * docs (dropped by stage 1) from quality rejections.
     */
-  final case class StageCounts(input: Long, afterLineClean: Long,
-                               afterQuality: Long, afterExactDedup: Long,
-                               output: Long,
+  final case class StageCounts(input: Long, afterLineClean: Long, afterQuality: Long,
+                               afterExactDedup: Long, output: Long,
                                afterDecontam: Option[Long] = None)
 
   /** @param embeddings optional (idCol, embedding: array&lt;float&gt;) table:
@@ -116,199 +116,254 @@ object CleanPipeline {
     *   together. Only embeddings of docs that survived the earlier gates
     *   participate (semi-join).
     * @return (clean corpus: idCol, text, split, shard_id; stage counts).
-    * The returned frame is persisted and materialized; every internal
-    * cache is released before returning — the caller owns exactly one
-    * handle (unpersist the result when done).
+    * The returned frame is the one cache the caller owns.
     */
   def run(docs: DataFrame, cfg: Config = Config(),
           idCol: String = "doc_id", textCol: String = "text",
           embeddings: Option[DataFrame] = None,
           benchmark: Option[DataFrame] = None): (DataFrame, StageCounts) = {
     val nInput = docs.count()
+    val (out, n) = runCached(docs, recipe(cfg, idCol, textCol, embeddings, benchmark))
+    (out, stageCounts(nInput, n, benchmark.isDefined))
+  }
 
-    // 1: line-level cleanup (returns a persisted, materialized frame —
-    // we hold its handle and release it once quality materializes)
-    val stripped = Dedup.stripBoilerplateLines(
-      docs, cfg.maxLineDocFreq, idCol = idCol, textCol = textCol)
-    val nLineClean = stripped.count() // cache-backed: already materialized
+  /** The recipe's steps before `neardup`: the frame the near-dup stage
+    * consumes (idCol, textCol with the REDACTED text, also excised when
+    * `exactSpanTokens` is set). The committed-artifact queries
+    * (q_clean_signatures / q_clean_embsketch) commit exactly this frame,
+    * which makes the WHOLE recipe DuckDB-replayable: the SQL replay of
+    * stages 1–4 must equal it (q_clean_signatures' oracle) and the full
+    * replay from the artifacts must equal run()'s output (q_clean_pipeline's
+    * oracle). The result is the one cache the caller owns.
+    */
+  def nearDupInputs(docs: DataFrame, cfg: Config = Config(),
+                    idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    runCached(docs, recipe(cfg, idCol, textCol, None, None).takeWhile(_.name != "neardup"))._1
+
+  /** RESUMABLE variant of [[run]]: every stage lands in a committed,
+    * `_graft_tag`-identified Parquet table under `workDir` (the
+    * [[StageStore]] protocol shared with [[CheckpointedPipeline]]), so a
+    * crash after any stage resumes at the next one instead of restarting a
+    * multi-hour 100 TB run from scratch. Each table is the next stage's
+    * input, so a resumed stage never re-evaluates anything upstream of it.
+    *
+    * Tags chain the config: a stage is invalidated by the input fingerprint
+    * plus every parameter at-or-upstream-of it (changing `tokensPerShard`
+    * recomputes only `clean_corpus`; changing `minTokens` recomputes
+    * everything from `quality` down). The optional embeddings table is
+    * fingerprinted into the `neardup` tag — swapping embeddings re-clusters
+    * without re-running the text gates.
+    *
+    * The returned frame and all intermediates are Parquet-backed: nothing to
+    * unpersist; stage counts are metadata-cheap counts over the tables.
+    *
+    * Storage trade (deliberate): four of the six stage tables carry the
+    * full text, so durable intermediates cost ~4x the corpus on disk while
+    * a run is resumable. That is the standard price of mid-pipeline
+    * resume; reclaim by deleting upstream stage dirs once a downstream
+    * stage is committed and resume-from-upstream is no longer wanted (the
+    * tags make a deleted stage recompute, never corrupt).
+    */
+  def runCheckpointed(spark: SparkSession, docs: DataFrame, workDir: String,
+                      cfg: Config = Config(),
+                      idCol: String = "doc_id", textCol: String = "text",
+                      embeddings: Option[DataFrame] = None,
+                      contentFingerprint: Boolean = false,
+                      benchmark: Option[DataFrame] = None)
+      : (DataFrame, StageCounts, CheckpointedPipeline.StageLog) = {
+    val store = new StageStore(spark, workDir)
+    val log = new CheckpointedPipeline.StageLog
+    val fp = StageStore.fingerprint(spark, docs, contentFingerprint)
+    val steps = recipe(cfg, idCol, textCol, embeddings, benchmark,
+      StageStore.fingerprint(spark, _, contentFingerprint), Some(s"$workDir/_cc_scratch"))
+    // the CC scratch is dropped once the neardup table is the durable copy
+    val tables = try runStored(store, fp, log, docs, steps)
+      finally store.deleteScratch("_cc_scratch")
+    // input is the one frame with no committed table behind it — its count
+    // is cached in the _metrics lineage keyed by the fingerprint, so a
+    // fully-resumed run never re-executes the input subtree for a number
+    val inputCount = store.cachedInputCount("input", fp, steps.head.tag)(docs.count())
+    (tables("clean_corpus"), stageCounts(inputCount, tables(_).count(), benchmark.isDefined), log)
+  }
+
+  /** One recipe step: `build` maps the previous step's output to this
+    * step's, registering each cache it makes through its callback. `tag`,
+    * the resume identity chained from upstream, is evaluated on first use;
+    * only the StageStore executor reads it.
+    */
+  private final class Step(val name: String, tagOf: => String,
+                           val build: (DataFrame, DataFrame => DataFrame) => DataFrame) {
+    lazy val tag: String = tagOf
+  }
+
+  /** Cache executor: persist and count each step's output, then release
+    * the previous output and the step's registered caches. Returns the last
+    * output (caller-owned) and every step's count.
+    */
+  private def runCached(docs: DataFrame, steps: Seq[Step]): (DataFrame, Map[String, Long]) = {
+    var counts = Map.empty[String, Long]
+    val last = steps.foldLeft(docs) { (prev, step) =>
+      try releasing { register =>
+        val built = step.build(prev, register)
+        // a renamed operator result (line_clean's) is its operator's cache
+        val out = if (built.storageLevel != StorageLevel.NONE) built
+          else built.persist(StorageLevel.MEMORY_AND_DISK)
+        try counts += step.name -> out.count()
+        catch { case e: Throwable => out.unpersist(); throw e }
+        out
+      } finally if (prev ne docs) prev.unpersist()
+    }
+    (last, counts)
+  }
+
+  /** StageStore executor: commit (or resume) each step as a stage table,
+    * the next step's input. The step's caches, its output included when
+    * that is an operator's cache, go once the table is written. */
+  private def runStored(store: StageStore, fp: String, log: CheckpointedPipeline.StageLog,
+                        docs: DataFrame, steps: Seq[Step]): Map[String, DataFrame] =
+    steps.map(_.name).zip(steps.scanLeft(docs) { (prev, step) =>
+      releasing(reg => store.stage(step.name, fp, step.tag, log)(reg(step.build(prev, reg))))
+    }.tail).toMap
+
+  /** Run `body` with a callback that registers a cache; release them after. */
+  private def releasing[A](body: (DataFrame => DataFrame) => A): A = {
+    val handles = collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => handles += df; df } finally handles.foreach(_.unpersist())
+  }
+
+  private def stageCounts(input: Long, n: String => Long, decontam: Boolean): StageCounts =
+    StageCounts(input, n("line_clean"), n("quality"), n("exact"), n("clean_corpus"),
+      if (decontam) Some(n("decontam")) else None)
+
+  /** The recipe. `fingerprint` names the embeddings and benchmark tables in
+    * tags; `ccScratch` holds the distributed CC loop's label tables. */
+  private def recipe(cfg: Config, idCol: String, textCol: String,
+                     embeddings: Option[DataFrame], benchmark: Option[DataFrame],
+                     fingerprint: DataFrame => String = _ => sys.error("no tag on the cache path"),
+                     ccScratch: Option[String] = None): Seq[Step] = {
+    val mh = cfg.minhash
+    // 1: line-level cleanup. The operator returns a persisted,
+    // materialized frame; renamed, it is this step's output and its cache.
+    lazy val cLine = s"mldf=${cfg.maxLineDocFreq}"
+    val lineClean = new Step("line_clean", cLine, (docs, _) =>
+      Dedup.stripBoilerplateLines(docs, cfg.maxLineDocFreq, idCol = idCol, textCol = textCol)
+        .select(col(idCol), col("clean_text").as(textCol)))
 
     // 2: quality gate on the PRE-redaction text. Ordering matters twice:
     // PII placeholders would distort the token/punct ratios, and feeding
     // the redact expression INTO withQualityColumns makes CollapseProject
     // inline the 3-regex chain into every quality column — measured 19.4 s
-    // fused vs 5.4 + 1.0 s sequenced on a 50k-doc corpus (CleanProbe).
-    val basicQuality = TextAnalysis.withQualityColumns(
-        stripped.select(col(idCol), col("clean_text").as(textCol)), textCol)
-      .filter(col("n_tokens") >= cfg.minTokens &&
-        col("punct_ratio") <= cfg.maxPunctRatio)
-      .select(col(idCol), col(textCol))
-    // optional Gopher gates: the signal operators consume the survivors
-    // from SEVERAL join sides — persist the pre-gate frame first (the
-    // self-join recompute sharp edge), gate, then persist the result
-    val (quality, nQuality) = cfg.gopher match {
-      case Some(g) =>
-        val pre = basicQuality.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // fused vs 5.4 + 1.0 s sequenced on a 50k-doc corpus (CleanProbe). The
+    // Gopher signal operators read the survivors from four join sides, so
+    // the pre-gate frame is cached first (the self-join recompute edge).
+    lazy val cQual = s"$cLine;mintok=${cfg.minTokens};maxpunct=${cfg.maxPunctRatio};" +
+      cfg.gopher.map(_.tag).getOrElse("gopher=off")
+    val quality = new Step("quality", cQual, (lines, register) => {
+      val basic = TextAnalysis.withQualityColumns(lines, textCol)
+        .filter(col("n_tokens") >= cfg.minTokens &&
+          col("punct_ratio") <= cfg.maxPunctRatio)
+        .select(col(idCol), col(textCol))
+      cfg.gopher.fold(basic) { g =>
+        val pre = register(basic.persist(StorageLevel.MEMORY_AND_DISK))
         pre.count()
-        val gated = applyGopherGates(pre, g, idCol, textCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = gated.count() // materializes AND is the stage count — one job
-        pre.unpersist()
-        (gated, n)
-      case None =>
-        val q = basicQuality.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (q, q.count())
-    }
-    stripped.unpersist()
+        applyGopherGates(pre, g, idCol, textCol)
+      }
+    })
 
-    // 3: PII scrub of the survivors — persisted and MATERIALIZED before
-    // the exact-dedup self-join below consumes it from two sides (the
-    // un-persisted projection would re-run the 3-regex chain once per
-    // side: the CLAUDE.md self-join sharp edge)
-    val redacted = quality
-      .select(col(idCol), TextAnalysis.redactPii(col(textCol)).as(textCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    redacted.count()
-    quality.unpersist()
+    // 3: PII scrub. The executor materializes it (cache or table) before
+    // exact dedup reads it from two sides: a lazy projection would re-run
+    // the 3-regex chain once per side (the CLAUDE.md self-join sharp edge).
+    val redact = new Step("redact", cQual, (q, _) =>
+      q.select(col(idCol), TextAnalysis.redactPii(col(textCol)).as(textCol)))
 
-    // 4: exact dedup survivors on the REDACTED text (digest-keyed:
-    // 32-byte shuffle keys)
-    val exact = redacted
-      .join(Dedup.exactDedup(redacted, idCol, textCol).select(idCol),
-        Seq(idCol), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nExact = exact.count()
-    redacted.unpersist()
+    // 4: exact dedup survivors on the REDACTED text (32-byte digest keys)
+    val exact = new Step("exact", cQual, (redacted, _) =>
+      redacted.join(Dedup.exactDedup(redacted, idCol, textCol).select(idCol),
+        Seq(idCol), "left_semi"))
 
-    // 4b (optional): benchmark decontamination of the survivors — drop
-    // any doc containing a benchmark item (n-gram containment >= the
-    // threshold) before the expensive near-dup stage signs it. The
-    // benchmark-gram cache is released as soon as the survivor set
-    // materializes; the survivor cache itself at the end.
-    var decontamHandle: Option[DataFrame] = None
-    val (afterDecontam, nDecontam) = benchmark match {
-      case Some(b) =>
-        val (flagged, benchHandle) = Dedup.ngramContainmentBloomWithHandle(
-          exact, b, cfg.decontamNgram, cfg.decontamMinContainment, idCol, textCol)
-        // a gram-less benchmark makes decontamination a silent no-op —
-        // in a recipe that is a compliance bug (an emptied/mispointed
-        // benchmark table ships contaminated data), so fail loudly
-        require(benchHandle.nonEmpty, s"decontamination benchmark produced zero " +
-          s"${cfg.decontamNgram}-grams (empty or sub-gram table) — refusing to " +
-          "silently skip the stage; drop the benchmark argument to disable decontam")
-        val d = exact.join(
-            flagged.select(col("doc_id").as(idCol)).distinct(),
-            Seq(idCol), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        decontamHandle = Some(d)
-        val nD = d.count()
-        benchHandle.foreach(_.unpersist())
-        (d, Some(nD))
-      case None => (exact, None)
-    }
+    // 4b (optional): benchmark decontamination — drop any doc containing a
+    // benchmark item (n-gram containment >= the threshold) before near-dup
+    // signs it. In the tag only when ENABLED, with the benchmark's own
+    // fingerprint: swapping the eval set recomputes decontam + downstream
+    // without re-running the text gates; workDirs without it resume as is.
+    lazy val cDecon = benchmark.fold(cQual)(b =>
+      s"$cQual;dcn=${cfg.decontamNgram};dct=${cfg.decontamMinContainment};bench=${fingerprint(b)}")
+    val decontam = benchmark.map(b => new Step("decontam", cDecon, (survivors, register) => {
+      val (flagged, benchGrams) = Dedup.ngramContainmentBloomWithHandle(
+        survivors, b, cfg.decontamNgram, cfg.decontamMinContainment, idCol, textCol)
+      benchGrams.foreach(register)
+      // a gram-less benchmark would make this a silent no-op that ships
+      // contaminated data (an emptied/mispointed table): fail loudly
+      require(benchGrams.nonEmpty, s"decontamination benchmark produced zero " +
+        s"${cfg.decontamNgram}-grams (empty or sub-gram table) — refusing to " +
+        "silently skip the stage; drop the benchmark argument to disable decontam")
+      survivors.join(flagged.select(col("doc_id").as(idCol)).distinct(), Seq(idCol), "left_anti")
+    }))
 
-    // 4c (optional): EXACT duplicate-span excision on the survivors —
-    // rewrites text (no doc is dropped, counts unchanged); near-dup then
-    // clusters the excised text, so a boilerplate span shared by unrelated
-    // docs no longer glues them into one cluster
-    // the operator returns its output persisted + materialized — consume
-    // the rename-projection straight off that cache (re-persisting the
-    // same text would transiently double-cache the corpus); the handle is
-    // released with the other caches at the end
-    var spanHandle: Option[DataFrame] = None
-    val corpus = cfg.exactSpanTokens match {
-      case Some(l) =>
-        val spans = Dedup.removeExactDuplicateSpans(afterDecontam, l, idCol, textCol)
-        spanHandle = Some(spans)
-        spans.select(col(idCol), col("clean_text").as(textCol))
-      case None => afterDecontam
-    }
+    // 4c (optional): EXACT duplicate-span excision — rewrites text (no doc
+    // is dropped); near-dup then clusters the excised text, so a span shared
+    // by unrelated docs no longer glues them into one cluster. In the tag
+    // only when ENABLED: an unconditional "spans=-1" would change every
+    // existing workDir's neardup tag and recompute the expensive clustering
+    // stages on upgrade with byte-identical semantics.
+    lazy val cSpan = cfg.exactSpanTokens.map(l => s"$cDecon;spans=$l").getOrElse(cDecon)
+    val spans = cfg.exactSpanTokens.map(l => new Step("exact_spans", cSpan, (survivors, register) => {
+      register(Dedup.removeExactDuplicateSpans(survivors, l, idCol, textCol))
+        .select(col(idCol), col("clean_text").as(textCol))
+    }))
 
     // 5: near-dup clusters -> one representative per cluster. Composes
     // candidates+pairs directly (NOT MinHashPipeline.run, whose trailing
-    // reference-CSV orderBy would pay a full sort that clustering
-    // discards) and owns the signature cache so it can be released as
-    // soon as the labels are materialized (cluster() checkpoints them).
-    val sigs = MinHashPipeline.signatures(
-      corpus.select(col(idCol).as("doc_id"), col(textCol).as("content")),
-      cfg.minhash).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lexPairs = MinHashPipeline.pairs(
-      MinHashPipeline.candidates(sigs, cfg.starCapBucketSize,
-        candidatePartitions = cfg.candidatePartitions), sigs, cfg.minhash)
-      .select("doc1", "doc2")
-    val (allPairs, sketchHandle) = withSemanticPairs(corpus, lexPairs, embeddings, cfg, idCol)
-    val clusters = ConnectedComponents.cluster(
-      allPairs, corpus.select(col(idCol).as("doc_id")))
-    sigs.unpersist()
-    sketchHandle.foreach(_.unpersist())
-    var bestHandle: Option[DataFrame] = None
-    val deduped =
+    // reference-CSV orderBy pays a full sort that clustering discards);
+    // signature and sketch caches go as soon as cluster() has materialized
+    // the labels. Small graphs solve on the driver; above the driver edge
+    // limit the loop keeps per-iteration labels under `ccScratch` when given
+    // (a lost executor re-reads parquet). keepbest= is in the tag only when
+    // ENABLED (as spans=): existing workDirs keep the min-label rule.
+    lazy val cNear = s"$cSpan;sh=${mh.shingleSize};sig=${mh.signatureSize};r=${mh.nBandRows};" +
+      s"seed=${mh.seed};thr=${mh.threshold};cap=${cfg.starCapBucketSize.getOrElse(-1)};" +
+      s"cp=${cfg.candidatePartitions.getOrElse(-1)};cos=${cfg.embeddingMinCosine};" +
+      s"emb=${embeddings.map(fingerprint).getOrElse("none")}" +
+      (if (cfg.keepBestByQuality) ";keepbest=on" else "")
+    val nearDup = new Step("neardup", cNear, (corpus, register) => {
+      val sigs = MinHashPipeline.signatures(
+        corpus.select(col(idCol).as("doc_id"), col(textCol).as("content")), mh).toDF()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val clusters = try {
+        val lexPairs = MinHashPipeline.pairs(
+          MinHashPipeline.candidates(sigs, cfg.starCapBucketSize,
+            candidatePartitions = cfg.candidatePartitions), sigs, mh)
+          .select("doc1", "doc2")
+        val (allPairs, sketch) = withSemanticPairs(corpus, lexPairs, embeddings, cfg, idCol)
+        try ConnectedComponents.cluster(allPairs, corpus.select(col(idCol).as("doc_id")),
+          reliableCheckpointDir = ccScratch)
+        finally sketch.foreach(_.unpersist())
+      } finally sigs.unpersist()
       if (cfg.keepBestByQuality) {
         // score once into a persisted frame (three join sides; the
         // self-join recompute sharp edge), elect, semi-join survivors
-        val labeled = Dedup
+        val labeled = register(Dedup
           .clusterScoreLabels(corpus, clusters, richnessScore(textCol), idCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        bestHandle = Some(labeled)
+          .persist(StorageLevel.MEMORY_AND_DISK))
         val repIds = Dedup.electBest(labeled)
-          .filter(col("is_rep") === 1)
-          .select(col("doc_id").as(idCol))
+          .filter(col("is_rep") === 1).select(col("doc_id").as(idCol))
         corpus.join(repIds, Seq(idCol), "left_semi")
       } else Dedup.keepRepresentatives(corpus, clusters, idCol)
+    })
 
     // 6: deterministic membership + token-budget shards
-    val withSplit = Corpus.split(deduped, cfg.splits, cfg.splitSeed, idCol)
-    val shards = Corpus.tokenShards(
-      withSplit.select(col(idCol),
-        TextAnalysis.tokenCountWs(col(textCol)).cast("long").as("n_tokens")),
-      cfg.tokensPerShard, idCol)
-    val out = withSplit
-      .join(shards.select(col(idCol), col("shard_id")), Seq(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nOut = out.count()
-    shards.unpersist()
-    exact.unpersist()
-    decontamHandle.foreach(_.unpersist())
-    spanHandle.foreach(_.unpersist())
-    bestHandle.foreach(_.unpersist())
-    (out, StageCounts(nInput, nLineClean, nQuality, nExact, nOut, nDecontam))
-  }
+    lazy val cOut = s"$cNear;splits=${cfg.splits.map { case (n, w) => s"$n:$w" }.mkString(",")};" +
+      s"sseed=${cfg.splitSeed};tps=${cfg.tokensPerShard}"
+    val cleanCorpus = new Step("clean_corpus", cOut, (deduped, register) => {
+      val withSplit = Corpus.split(deduped, cfg.splits, cfg.splitSeed, idCol)
+      val shards = register(Corpus.tokenShards(
+        withSplit.select(col(idCol),
+          TextAnalysis.tokenCountWs(col(textCol)).cast("long").as("n_tokens")),
+        cfg.tokensPerShard, idCol))
+      withSplit.join(shards.select(col(idCol), col("shard_id")), Seq(idCol))
+    })
 
-  /** Stages 1–4 of [[run]] (boiler-strip → quality [→ gopher] → PII redact
-    * → exact-dedup survivors) as one composition: the near-dup stage's
-    * input corpus, (idCol, textCol with the REDACTED text). Exists so the
-    * committed-artifact queries (q_clean_signatures / q_clean_embsketch)
-    * can commit exactly the frame run()'s near-dup stage consumes, making
-    * the WHOLE composed recipe DuckDB-replayable: the SQL replay of stages
-    * 1–4 must equal THIS frame (q_clean_signatures' oracle) and the full
-    * pipeline replay from the committed artifacts must equal run()'s
-    * output (q_clean_pipeline's oracle) — drift on either side is a red
-    * correctness row. No cache choreography beyond the self-join persist
-    * the exact-dedup sharp edge requires (run() keeps its tuned
-    * equivalent); cache lifetime is CALLER-owned as everywhere.
-    */
-  def nearDupInputs(docs: DataFrame, cfg: Config = Config(),
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val stripped = Dedup.stripBoilerplateLines(
-      docs, cfg.maxLineDocFreq, idCol = idCol, textCol = textCol)
-    val basicQuality = TextAnalysis.withQualityColumns(
-        stripped.select(col(idCol), col("clean_text").as(textCol)), textCol)
-      .filter(col("n_tokens") >= cfg.minTokens &&
-        col("punct_ratio") <= cfg.maxPunctRatio)
-      .select(col(idCol), col(textCol))
-    val quality = cfg.gopher match {
-      case Some(g) =>
-        val pre = basicQuality.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pre.count()
-        applyGopherGates(pre, g, idCol, textCol)
-      case None => basicQuality
-    }
-    val redacted = quality
-      .select(col(idCol), TextAnalysis.redactPii(col(textCol)).as(textCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    redacted.count()
-    redacted.join(Dedup.exactDedup(redacted, idCol, textCol).select(idCol),
-      Seq(idCol), "left_semi")
+    Seq(lineClean, quality, redact, exact) ++ decontam ++ spans ++ Seq(nearDup, cleanCorpus)
   }
 
   /** Integer content-richness score for keep-best election: whitespace
@@ -326,10 +381,9 @@ object CleanPipeline {
   }
 
   /** Apply the [[GopherGates]] thresholds to (idCol, textCol) docs: four
-    * exact signal operators joined per doc, one conjunctive filter — the
-    * one gate implementation for BOTH [[run]] and [[runCheckpointed]].
-    * The input must be materialization-backed (cache or parquet): the
-    * signal kernels consume it from four sides.
+    * exact signal operators joined per doc, one conjunctive filter. The
+    * input must be materialization-backed (cache or parquet): the signal
+    * kernels consume it from four sides.
     */
   private def applyGopherGates(docs: DataFrame, g: GopherGates,
                                idCol: String, textCol: String): DataFrame = {
@@ -357,28 +411,31 @@ object CleanPipeline {
       .select(col(idCol), col(textCol))
   }
 
-  /** Optional SEMANTIC pairs (embedding-cosine near-dups of the surviving
-    * docs, LSH-candidate join) unioned with the lexical pairs — the one
-    * near-dup pair source for BOTH [[run]] and [[runCheckpointed]] (shared
-    * so the guard logic cannot drift between the two paths). Returns the
-    * pair frame plus the sketch cache handle the CALLER must release after
-    * clustering materializes.
+  /** The embeddings the semantic arm sketches: (vec_id: long, embedding)
+    * rows of `embeddings` (idCol, embedding) whose id is in `survivors`.
+    * Uncurated input guard: null ids / null or empty vectors would NPE
+    * inside the sketch kernel (and a null first row would crash the dim
+    * probe), so they are dropped; vectors must share one dimension. The
+    * q_clean_embsketch artifact sketches this same frame.
     */
-  private def withSemanticPairs(exact: DataFrame, lexPairs: DataFrame,
+  private[graft] def survivorEmbeddings(embeddings: DataFrame, survivors: DataFrame,
+                                        idCol: String = "doc_id"): DataFrame =
+    embeddings
+      .select(col(idCol).cast("long").as("vec_id"), col("embedding"))
+      .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
+        size(col("embedding")) > 0)
+      .join(survivors.select(col(idCol).cast("long").as("vec_id")), Seq("vec_id"), "left_semi")
+
+  /** Optional SEMANTIC pairs (embedding-cosine near-dups of the surviving
+    * docs, LSH-candidate join) unioned with the lexical pairs, plus the
+    * sketch cache the CALLER releases once clustering has materialized.
+    */
+  private def withSemanticPairs(survivors: DataFrame, lexPairs: DataFrame,
                                 embeddings: Option[DataFrame], cfg: Config,
                                 idCol: String): (DataFrame, Option[DataFrame]) =
     embeddings match {
       case Some(emb0) =>
-        // uncurated input guard: null ids / null or empty vectors would NPE
-        // inside the sketch kernel (and a null first row would crash the
-        // dim probe) — drop them; vectors must share one dimension.
-        // Only embeddings of docs that survived the earlier gates join.
-        val emb = emb0
-          .select(col(idCol).cast("long").as("vec_id"), col("embedding"))
-          .filter(col("vec_id").isNotNull && col("embedding").isNotNull &&
-            size(col("embedding")) > 0)
-          .join(exact.select(col(idCol).cast("long").as("vec_id")),
-            Seq("vec_id"), "left_semi")
+        val emb = survivorEmbeddings(emb0, survivors, idCol)
         // dim probed from the FILTERED survivors (size > 0, never null)
         val dim = emb.select(size(col("embedding"))).limit(1).collect()
           .headOption.map(_.getInt(0)).getOrElse(0)
@@ -390,224 +447,4 @@ object CleanPipeline {
         }
       case None => (lexPairs, None)
     }
-
-  /** RESUMABLE variant of [[run]]: every stage lands in a committed,
-    * `_graft_tag`-identified Parquet table under `workDir` (the
-    * [[StageStore]] protocol shared with [[CheckpointedPipeline]]), so a
-    * crash after any stage resumes at the next one instead of restarting a
-    * multi-hour 100 TB run from scratch — a crash after near-dup clustering
-    * resumes directly at split/shards.
-    *
-    * Stage graph (each table is the next stage's input, so a resumed stage
-    * never re-evaluates anything upstream of it):
-    *
-    *   line_clean -> quality -> redact -> exact [-> decontam]
-    *     [-> exact_spans] -> neardup -> clean_corpus
-    *
-    * Tags chain the config: a stage is invalidated by the input fingerprint
-    * plus every parameter at-or-upstream-of it (changing `tokensPerShard`
-    * recomputes only `clean_corpus`; changing `minTokens` recomputes
-    * everything from `quality` down). The optional embeddings table is
-    * fingerprinted into the `neardup` tag — swapping embeddings re-clusters
-    * without re-running the text gates.
-    *
-    * Unlike [[run]] (whose intermediates are caller-released caches), the
-    * returned frame and all intermediates here are Parquet-backed: there is
-    * nothing to unpersist, and stage counts are metadata-cheap counts over
-    * the committed tables.
-    *
-    * Storage trade (deliberate): four of the six stage tables carry the
-    * full text, so durable intermediates cost ~4x the corpus on disk while
-    * a run is resumable. That is the standard price of mid-pipeline
-    * resume; reclaim by deleting upstream stage dirs once a downstream
-    * stage is committed and resume-from-upstream is no longer wanted (the
-    * tags make a deleted stage recompute, never corrupt).
-    */
-  def runCheckpointed(spark: SparkSession, docs: DataFrame, workDir: String,
-                      cfg: Config = Config(),
-                      idCol: String = "doc_id", textCol: String = "text",
-                      embeddings: Option[DataFrame] = None,
-                      contentFingerprint: Boolean = false,
-                      benchmark: Option[DataFrame] = None)
-      : (DataFrame, StageCounts, CheckpointedPipeline.StageLog) = {
-    val store = new StageStore(spark, workDir)
-    val log = new CheckpointedPipeline.StageLog
-    val fp = StageStore.fingerprint(spark, docs, contentFingerprint)
-    val embFp = embeddings
-      .map(e => StageStore.fingerprint(spark, e, contentFingerprint))
-      .getOrElse("none")
-
-    val cLine = s"mldf=${cfg.maxLineDocFreq}"
-    val cQual = s"$cLine;mintok=${cfg.minTokens};maxpunct=${cfg.maxPunctRatio};" +
-      cfg.gopher.map(_.tag).getOrElse("gopher=off")
-    val mh = cfg.minhash
-    // decontam component only when ENABLED (a benchmark table is passed):
-    // the benchmark's own fingerprint is in the tag, so swapping the eval
-    // set recomputes decontam + downstream without re-running the text
-    // gates; pre-existing workDirs without decontam resume unchanged
-    val cDecon = benchmark match {
-      case Some(b) =>
-        val bFp = StageStore.fingerprint(spark, b, contentFingerprint)
-        s"$cQual;dcn=${cfg.decontamNgram};dct=${cfg.decontamMinContainment};bench=$bFp"
-      case None => cQual
-    }
-    // spans component only when ENABLED: unconditionally embedding
-    // "spans=-1" would change every pre-existing workDir's neardup tag and
-    // force the expensive clustering stages to recompute on upgrade with
-    // byte-identical semantics
-    val cSpan = cfg.exactSpanTokens.map(l => s"$cDecon;spans=$l").getOrElse(cDecon)
-    val cNearBase = s"$cSpan;sh=${mh.shingleSize};sig=${mh.signatureSize};r=${mh.nBandRows};" +
-      s"seed=${mh.seed};thr=${mh.threshold};cap=${cfg.starCapBucketSize.getOrElse(-1)};" +
-      s"cp=${cfg.candidatePartitions.getOrElse(-1)};cos=${cfg.embeddingMinCosine};emb=$embFp"
-    // keep-best component only when ENABLED (same rationale as spans=):
-    // pre-existing workDirs keep resuming under the default min-label rule
-    val cNear =
-      if (cfg.keepBestByQuality) s"$cNearBase;keepbest=on" else cNearBase
-    val cOut = s"$cNear;splits=${cfg.splits.map { case (n, w) => s"$n:$w" }.mkString(",")};" +
-      s"sseed=${cfg.splitSeed};tps=${cfg.tokensPerShard}"
-
-    // 1: line-level cleanup. stripBoilerplateLines returns a persisted
-    // frame (its internal contract) — release it once the table is written.
-    var strippedHandle: Option[DataFrame] = None
-    val lineClean = store.stage("line_clean", fp, cLine, log) {
-      val s = Dedup.stripBoilerplateLines(docs, cfg.maxLineDocFreq, idCol = idCol, textCol = textCol)
-      strippedHandle = Some(s)
-      s.select(col(idCol), col("clean_text").as(textCol))
-    }
-    strippedHandle.foreach(_.unpersist())
-
-    // 2: quality gate on the PRE-redaction text (ordering rationale in
-    // [[run]]); with Gopher gates the signal kernels consume the pre-gate
-    // survivors from four join sides — cache it for the stage write, then
-    // release (the committed table is the durable copy)
-    var preGateHandle: Option[DataFrame] = None
-    val quality = store.stage("quality", fp, cQual, log) {
-      val basic = TextAnalysis.withQualityColumns(lineClean, textCol)
-        .filter(col("n_tokens") >= cfg.minTokens &&
-          col("punct_ratio") <= cfg.maxPunctRatio)
-        .select(col(idCol), col(textCol))
-      cfg.gopher match {
-        case Some(g) =>
-          val pre = basic.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          preGateHandle = Some(pre)
-          pre.count()
-          applyGopherGates(pre, g, idCol, textCol)
-        case None => basic
-      }
-    }
-    preGateHandle.foreach(_.unpersist())
-
-    // 3: PII scrub. The committed table replaces [[run]]'s materialization
-    // boundary: downstream self-joins re-scan Parquet, never the regex chain.
-    val redacted = store.stage("redact", fp, cQual, log) {
-      quality.select(col(idCol), TextAnalysis.redactPii(col(textCol)).as(textCol))
-    }
-
-    // 4: exact dedup survivors on the redacted text
-    val exact = store.stage("exact", fp, cQual, log) {
-      redacted.join(Dedup.exactDedup(redacted, idCol, textCol).select(idCol),
-        Seq(idCol), "left_semi")
-    }
-
-    // 4b (optional): benchmark decontamination — its own committed stage
-    // table (the flag pass over the corpus resumes); enabling/disabling or
-    // swapping the benchmark invalidates spans/neardup/downstream through
-    // the chained tag (cDecon is a prefix of cSpan/cNear)
-    var benchGramHandle: Option[DataFrame] = None
-    val afterDecontam = benchmark match {
-      case Some(b) =>
-        val st = store.stage("decontam", fp, cDecon, log) {
-          val (flagged, bh) = Dedup.ngramContainmentBloomWithHandle(
-            exact, b, cfg.decontamNgram, cfg.decontamMinContainment, idCol, textCol)
-          benchGramHandle = bh
-          // gram-less benchmark = silent no-op = compliance bug: fail loudly
-          // (same contract as run(); see the rationale there)
-          require(bh.nonEmpty, s"decontamination benchmark produced zero " +
-            s"${cfg.decontamNgram}-grams (empty or sub-gram table) — refusing to " +
-            "silently skip the stage; drop the benchmark argument to disable decontam")
-          exact.join(
-            flagged.select(col("doc_id").as(idCol)).distinct(),
-            Seq(idCol), "left_anti")
-        }
-        benchGramHandle.foreach(_.unpersist())
-        st
-      case None => exact
-    }
-
-    // 4c (optional): exact duplicate-span excision — its own committed
-    // stage table so the expensive window pass resumes; enabling/disabling
-    // or changing the window length invalidates neardup and downstream
-    // through the chained tag (cSpan is a prefix of cNear)
-    var spanHandle: Option[DataFrame] = None
-    val corpus = cfg.exactSpanTokens match {
-      case Some(l) =>
-        val st = store.stage("exact_spans", fp, cSpan, log) {
-          val s = Dedup.removeExactDuplicateSpans(afterDecontam, l, idCol, textCol)
-          spanHandle = Some(s)
-          s.select(col(idCol), col("clean_text").as(textCol))
-        }
-        spanHandle.foreach(_.unpersist())
-        st
-      case None => afterDecontam
-    }
-
-    // 5: near-dup (lexical + optional semantic) -> representatives
-    var sigsHandle: Option[DataFrame] = None
-    var sketchHandle: Option[DataFrame] = None
-    var bestHandle: Option[DataFrame] = None
-    val deduped = store.stage("neardup", fp, cNear, log) {
-      val sigs = MinHashPipeline.signatures(
-        corpus.select(col(idCol).as("doc_id"), col(textCol).as("content")), mh).toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sigsHandle = Some(sigs)
-      val lexPairs = MinHashPipeline.pairs(
-        MinHashPipeline.candidates(sigs, cfg.starCapBucketSize,
-          candidatePartitions = cfg.candidatePartitions), sigs, mh)
-        .select("doc1", "doc2")
-      val (allPairs, sketch) = withSemanticPairs(corpus, lexPairs, embeddings, cfg, idCol)
-      sketchHandle = sketch
-      // small graphs solve on the driver with no iteration tables; above
-      // the driver edge limit the loop keeps durable per-iteration labels
-      // (a lost executor re-reads parquet), scratch dropped below once the
-      // stage table is the durable copy
-      val clusters = ConnectedComponents.cluster(
-        allPairs, corpus.select(col(idCol).as("doc_id")),
-        reliableCheckpointDir = Some(s"$workDir/_cc_scratch"))
-      if (cfg.keepBestByQuality) {
-        val labeled = Dedup
-          .clusterScoreLabels(corpus, clusters, richnessScore(textCol), idCol)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        bestHandle = Some(labeled)
-        val repIds = Dedup.electBest(labeled)
-          .filter(col("is_rep") === 1)
-          .select(col("doc_id").as(idCol))
-        corpus.join(repIds, Seq(idCol), "left_semi")
-      } else Dedup.keepRepresentatives(corpus, clusters, idCol)
-    }
-    sigsHandle.foreach(_.unpersist())
-    sketchHandle.foreach(_.unpersist())
-    bestHandle.foreach(_.unpersist())
-    store.deleteScratch("_cc_scratch")
-
-    // 6: deterministic membership + token-budget shards
-    var shardsHandle: Option[DataFrame] = None
-    val out = store.stage("clean_corpus", fp, cOut, log) {
-      val withSplit = Corpus.split(deduped, cfg.splits, cfg.splitSeed, idCol)
-      val shards = Corpus.tokenShards(
-        withSplit.select(col(idCol),
-          TextAnalysis.tokenCountWs(col(textCol)).cast("long").as("n_tokens")),
-        cfg.tokensPerShard, idCol)
-      shardsHandle = Some(shards)
-      withSplit.join(shards.select(col(idCol), col("shard_id")), Seq(idCol))
-    }
-    shardsHandle.foreach(_.unpersist())
-
-    // input is the one frame with no committed table behind it — its count
-    // is cached in the _metrics lineage keyed by the fingerprint, so a
-    // fully-resumed run never re-executes the input subtree for a number
-    val inputCount = store.cachedInputCount("input", fp, cLine)(docs.count())
-    val counts = StageCounts(inputCount, lineClean.count(), quality.count(),
-      exact.count(), out.count(), benchmark.map(_ => afterDecontam.count()))
-    (out, counts, log)
-  }
 }

@@ -258,6 +258,183 @@ class ResumeSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("CleanPipeline.runCheckpointed: every stage tag is byte-identical to its pinned literal") {
+    // A drifted tag silently recomputes every stage of every existing work
+    // dir. The literals were captured before the recipe became one step
+    // list; the content fingerprint of the in-memory fixtures makes them
+    // deterministic.
+    val rows = CleanFixture.rows(spark)
+    val bench = Some(CleanFixture.benchmark(spark))
+    val emb = Some(CleanFixture.embeddings(spark))
+    val base = CleanFixture.cfg
+    val gopher = Some(CleanPipeline.GopherGates())
+    val all = base.copy(gopher = gopher, exactSpanTokens = Some(4), keepBestByQuality = true)
+    val runs = Seq(
+      ("default", base, None, None),
+      ("gopher", base.copy(gopher = gopher), None, None),
+      ("decontam", base, None, bench),
+      ("spans", base.copy(exactSpanTokens = Some(4)), None, None),
+      ("keepbest", base.copy(keepBestByQuality = true), None, None),
+      ("embeddings", base, emb, None),
+      ("all", all, emb, bench))
+    val got = runs.map { case (name, c, e, b) =>
+      val work = java.nio.file.Files.createTempDirectory(s"graft_tags_$name")
+      CleanPipeline.runCheckpointed(spark, rows, work.toString, c, embeddings = e, benchmark = b)
+      val tags = work.toFile.listFiles().toSeq.sortBy(_.getName).flatMap { d =>
+        val t = d.toPath.resolve("_graft_tag")
+        if (java.nio.file.Files.exists(t))
+          Some(d.getName -> java.nio.file.Files.readAllBytes(t).toSeq)
+        else None
+      }
+      name -> tags
+    }
+    val expected: Map[String, Seq[(String, String)]] = Map(
+      "default" -> Seq(
+        "clean_corpus" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;sh=3;sig=64;r=4;" +
+          "seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=none;" +
+          "splits=train:0.98,val:0.01,test:0.01;sseed=13;tps=100"),
+        "exact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "line_clean" ->
+          "n=12;h=17028483549|mldf=3",
+        "neardup" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;sh=3;sig=64;r=4;" +
+          "seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=none"),
+        "quality" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "redact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off"),
+      "gopher" -> Seq(
+        "clean_corpus" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8;" +
+          "sh=3;sig=64;r=4;seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=none;" +
+          "splits=train:0.98,val:0.01,test:0.01;sseed=13;tps=100"),
+        "exact" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8"),
+        "line_clean" ->
+          "n=12;h=17028483549|mldf=3",
+        "neardup" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8;" +
+          "sh=3;sig=64;r=4;seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=none"),
+        "quality" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8"),
+        "redact" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8")),
+      "decontam" -> Seq(
+        "clean_corpus" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;dcn=8;dct=0.8;" +
+          "bench=n=1;h=3994077573;sh=3;sig=64;r=4;seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;" +
+          "emb=none;splits=train:0.98,val:0.01,test:0.01;sseed=13;tps=100"),
+        "decontam" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;dcn=8;dct=0.8;" +
+          "bench=n=1;h=3994077573"),
+        "exact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "line_clean" ->
+          "n=12;h=17028483549|mldf=3",
+        "neardup" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;dcn=8;dct=0.8;" +
+          "bench=n=1;h=3994077573;sh=3;sig=64;r=4;seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;" +
+          "emb=none"),
+        "quality" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "redact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off"),
+      "spans" -> Seq(
+        "clean_corpus" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;spans=4;sh=3;" +
+          "sig=64;r=4;seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=none;" +
+          "splits=train:0.98,val:0.01,test:0.01;sseed=13;tps=100"),
+        "exact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "exact_spans" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;spans=4",
+        "line_clean" ->
+          "n=12;h=17028483549|mldf=3",
+        "neardup" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;spans=4;sh=3;" +
+          "sig=64;r=4;seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=none"),
+        "quality" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "redact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off"),
+      "keepbest" -> Seq(
+        "clean_corpus" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;sh=3;sig=64;r=4;" +
+          "seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=none;keepbest=on;" +
+          "splits=train:0.98,val:0.01,test:0.01;sseed=13;tps=100"),
+        "exact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "line_clean" ->
+          "n=12;h=17028483549|mldf=3",
+        "neardup" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;sh=3;sig=64;r=4;" +
+          "seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=none;keepbest=on"),
+        "quality" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "redact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off"),
+      "embeddings" -> Seq(
+        "clean_corpus" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;sh=3;sig=64;r=4;" +
+          "seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=n=12;h=32202824770;" +
+          "splits=train:0.98,val:0.01,test:0.01;sseed=13;tps=100"),
+        "exact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "line_clean" ->
+          "n=12;h=17028483549|mldf=3",
+        "neardup" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off;sh=3;sig=64;r=4;" +
+          "seed=13;thr=0.5;cap=256;cp=-1;cos=0.95;emb=n=12;h=32202824770"),
+        "quality" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off",
+        "redact" ->
+          "n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;gopher=off"),
+      "all" -> Seq(
+        "clean_corpus" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8;" +
+          "dcn=8;dct=0.8;bench=n=1;h=3994077573;spans=4;sh=3;sig=64;r=4;seed=13;thr=0.5;" +
+          "cap=256;cp=-1;cos=0.95;emb=n=12;h=32202824770;keepbest=on;" +
+          "splits=train:0.98,val:0.01,test:0.01;sseed=13;tps=100"),
+        "decontam" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8;" +
+          "dcn=8;dct=0.8;bench=n=1;h=3994077573"),
+        "exact" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8"),
+        "exact_spans" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8;" +
+          "dcn=8;dct=0.8;bench=n=1;h=3994077573;spans=4"),
+        "line_clean" ->
+          "n=12;h=17028483549|mldf=3",
+        "neardup" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8;" +
+          "dcn=8;dct=0.8;bench=n=1;h=3994077573;spans=4;sh=3;sig=64;r=4;seed=13;thr=0.5;" +
+          "cap=256;cp=-1;cos=0.95;emb=n=12;h=32202824770;keepbest=on"),
+        "quality" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8"),
+        "redact" ->
+          ("n=12;h=17028483549|mldf=3;mintok=5;maxpunct=0.5;" +
+          "gopher=0.3,0.2,0.2/0.18/0.16,0.15/0.14/0.13/0.12/0.11/0.1,0.1,0.9,0.3,0.8")))
+    got.foreach { case (name, tags) =>
+      val want = expected(name).map { case (stage, tag) => stage -> tag.getBytes("UTF-8").toSeq }
+      assert(tags == want, s"$name: " + tags.map { case (stage, bytes) =>
+        s"$stage -> ${new String(bytes.toArray, "UTF-8")}" }.mkString("\n"))
+    }
+    spark.catalog.clearCache()
+  }
+
   test("dedup_corpus stage: representatives only, resumable like any stage") {
     val work = java.nio.file.Files.createTempDirectory("graft_corpus").toString
     val docs = CorpusGen.withDocIds(CorpusGen.sourceFiles(spark, 200)).cache()
