@@ -3,7 +3,8 @@ package graft.tools
 import graft.core.{MinHashConfig, SignatureKernel}
 
 /** Pure-JVM CPU scaling probe (no Spark): runs the signature kernel over a
-  * fixed synthetic workload with T threads; prints docs/sec.
+  * fixed synthetic workload with 1, cpus/2 and cpus threads, where cpus is
+  * `SPARK_GRAFT_CPUS`, else the available cores; prints docs/sec per leg.
   */
 object CpuProbe {
   def main(args: Array[String]): Unit = {
@@ -14,7 +15,9 @@ object CpuProbe {
     }.toArray
     // JIT warmup
     (0 until 4000).foreach(i => SignatureKernel.compute(docs(i % docs.length), cfg))
-    for (threads <- Seq(1, 2, 8, 32)) {
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    for (threads <- Seq(1, cpus / 2, cpus).filter(_ >= 1).distinct) {
       val t0 = System.nanoTime()
       val per = nDocs / threads
       val ts = (0 until threads).map { t =>

@@ -142,6 +142,82 @@ class KernelSpec extends AnyFunSuite {
     assert(SignatureKernel.exactJaccard(e, a) == 0.0)
   }
 
+  /** The scalar reference the lane kernel replaced: one
+    * `Murmur2.hashRange` per (shingle, seed) with an unsigned-compare
+    * min, and a boxed unsigned `TreeSet` for the shingle-hash set.
+    */
+  private object ScalarKernel {
+    def signature(content: String, cfg: MinHashConfig): Array[Int] = {
+      val sig = Array.fill(cfg.signatureSize)(0xffffffff)
+      val (joined, starts, ends) = Tokenizer.joinedTokens(content)
+      for (s <- 0 to starts.length - cfg.shingleSize; j <- sig.indices) {
+        val h = Murmur2.hashRange(joined, starts(s), ends(s + cfg.shingleSize - 1), cfg.seed * j)
+        if (java.lang.Integer.compareUnsigned(h, sig(j)) < 0) sig(j) = h
+      }
+      sig
+    }
+
+    def hashSet(content: String, cfg: MinHashConfig): Array[Int] = {
+      val set = new java.util.TreeSet[Integer](
+        (a: Integer, b: Integer) => java.lang.Integer.compareUnsigned(a, b))
+      val (joined, starts, ends) = Tokenizer.joinedTokens(content)
+      for (s <- 0 to starts.length - cfg.shingleSize)
+        set.add(Murmur2.hashRange(joined, starts(s), ends(s + cfg.shingleSize - 1), cfg.seed))
+      set.toArray(new Array[Integer](0)).map(_.intValue)
+    }
+  }
+
+  test("lane kernel == scalar per-seed reference: random streams, every tail, odd widths, edge seeds") {
+    val rnd = new java.util.Random(20261020L)
+    val alnum = "abcdefghijklmnopqrstuvwxyz0123456789"
+    val ws = Array(" ", "  ", "\t", "\n", "\r\n")
+    // tokens of 1..9 chars, so shingle byte lengths hit every residue mod 4;
+    // some carry case or punctuation the tokenizer folds or strips
+    def token(): String = {
+      val t = Array.fill(1 + rnd.nextInt(9))(alnum.charAt(rnd.nextInt(alnum.length))).mkString
+      rnd.nextInt(8) match {
+        case 0 => t.toUpperCase
+        case 1 => t + "!"
+        case 2 => "--"
+        case _ => t
+      }
+    }
+    def doc(): String = rnd.nextInt(6) match {
+      case 0 => "" // zero shingles
+      case 1 => Seq.fill(rnd.nextInt(4))(token()).mkString(" ") // often below shingleSize
+      case _ => Seq.fill(rnd.nextInt(60))(token()).map(_ + ws(rnd.nextInt(ws.length))).mkString
+    }
+    val tails = new Array[Int](4)
+    var zeroShingleDocs = 0
+    var topBitSig = 0
+    var topBitSet = 0
+    for {
+      shingle <- 1 to 5
+      signature <- Seq(1, 3, 17, 200, 300)
+      seed <- Seq(0, 1, -1, Int.MaxValue, Int.MinValue)
+    } {
+      val cfg = MinHashConfig(shingle, signature, 1, seed)
+      (0 until 6).foreach { _ =>
+        val d = doc()
+        val (joined, starts, ends) = Tokenizer.joinedTokens(d)
+        if (starts.length < shingle) zeroShingleDocs += 1
+        for (s <- 0 to starts.length - shingle) tails((ends(s + shingle - 1) - starts(s)) & 3) += 1
+        val (sig, bands) = SignatureKernel.compute(d, cfg)
+        val want = ScalarKernel.signature(d, cfg)
+        assert(sig.sameElements(want), s"signature of ${joined.take(60)} under $cfg")
+        assert(bands.sameElements(want)) // one row per band: bands are the rows
+        val set = SignatureKernel.shingleHashSet(d, cfg)
+        assert(set.sameElements(ScalarKernel.hashSet(d, cfg)), s"shingle set of ${joined.take(60)} under $cfg")
+        topBitSig += sig.count(_ < 0)
+        topBitSet += set.count(_ < 0)
+      }
+    }
+    // the draws really covered what the test claims to cover
+    assert(tails.forall(_ > 100), s"shingle lengths by residue mod 4: ${tails.toSeq}")
+    assert(zeroShingleDocs > 50 && topBitSig > 100 && topBitSet > 100,
+      s"zero-shingle docs $zeroShingleDocs, top-bit signature rows $topBitSig, top-bit set hashes $topBitSet")
+  }
+
   test("bandsOf folds by XOR positionally (Q4)") {
     val cfg = MinHashConfig(shingleSize = 3, signatureSize = 8, nBandRows = 2, seed = 13)
     val sig = Array(1, 2, 3, 4, 5, 6, 7, 8)

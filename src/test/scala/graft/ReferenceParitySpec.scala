@@ -5,89 +5,128 @@ import graft.operators.MinHashPipeline
 import graft.sources.CorpusGen
 import org.apache.spark.sql.functions._
 
+import java.nio.file.{Files, Path}
 import scala.sys.process._
 
-/** The strongest correctness evidence in the repo: run the ACTUAL reference
-  * engine (compiled serial, gcc -D__MP_NONE__ from the read-only tree at
-  * /root/reference) on a 400-file synthetic source-code corpus and require
-  * our pipeline's pair output to be IDENTICAL — dup-pair recall 1.0, not
-  * just >= 0.99 — at the same shingle/signature/bandrows/seed/threshold
-  * config. Also asserts the sha256 ingest invariant between the parquet
-  * rows and the .txt corpus the reference reads (BASELINE.json input_hint).
+/** The strongest correctness evidence in the repo: our pipeline's pair
+  * output must be IDENTICAL — dup-pair recall 1.0, not just >= 0.99 — to
+  * the reference engine's at the same shingle/signature/bandrows/seed/
+  * threshold config. Also asserts the sha256 ingest invariant between the
+  * parquet rows and the .txt corpus the reference reads (BASELINE.json
+  * input_hint).
   *
-  * Skipped (assume) if gcc or the reference tree is unavailable.
+  * Every case compares against the committed fixtures under
+  * `src/test/resources/parity/` (see the README there: transitively
+  * reference-equal, last direct check `db740af`). When gcc and the
+  * read-only C reference tree (`binaryAvailable`) are available, the case
+  * also runs the ACTUAL reference (compiled serial, gcc -D__MP_NONE__) and
+  * requires equality with it too.
   */
 class ReferenceParitySpec extends SparkSpec {
 
   private val binDir = "/tmp/refbuild"
   private val bin = s"$binDir/minhash_NONE"
 
-  private def ensureBinary(): Boolean = {
-    if (new java.io.File(bin).canExecute) return true
-    if (!new java.io.File("/root/reference/src/OMP").isDirectory) return false
-    new java.io.File(binDir).mkdirs()
-    val cmd = Seq("bash", "-c",
-      s"gcc -O3 -w -D__MP_NONE__ /root/reference/src/OMP/*.c -o $bin -lm")
-    cmd.! == 0 && new java.io.File(bin).canExecute
+  private lazy val binaryAvailable: Boolean = {
+    if (new java.io.File(bin).canExecute) true
+    else if (!new java.io.File("/root/reference/src/OMP").isDirectory) false
+    else {
+      new java.io.File(binDir).mkdirs()
+      val cmd = Seq("bash", "-c",
+        s"gcc -O3 -w -D__MP_NONE__ /root/reference/src/OMP/*.c -o $bin -lm")
+      cmd.! == 0 && new java.io.File(bin).canExecute
+    }
   }
 
+  /** The reference's results.csv rows (header dropped, sorted) for the
+    * <id>.txt corpus in `dir`, or None when the binary is unavailable.
+    */
+  private def reference(dir: Path, nDocs: Int, offset: Int, cfg: MinHashConfig): Option[Vector[String]] =
+    if (!binaryAvailable) None
+    else {
+      val work = Files.createTempDirectory("refrun").toFile
+      val rc = Process(
+        Seq(bin, "-n", "1", "--docs", nDocs.toString, "--offset", offset.toString,
+          "--shingle", cfg.shingleSize.toString,
+          "--signature", cfg.signatureSize.toString,
+          "--bandrows", cfg.nBandRows.toString,
+          "--seed", cfg.seed.toString,
+          "--threshold", cfg.threshold.toString,
+          dir.toString + "/"),
+        work
+      ).!
+      assert(rc == 0, s"reference binary exited $rc (cfg=$cfg)")
+      val src = scala.io.Source.fromFile(new java.io.File(work, "results.csv"))
+      try Some(src.getLines().drop(1).toVector.sorted) finally src.close()
+    }
+
+  private def sha256(bytes: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(bytes).map("%02x".format(_)).mkString
+
+  private def resource(name: String): Array[Byte] = {
+    val in = getClass.getResourceAsStream(s"/parity/$name")
+    assert(in != null, s"parity fixture $name missing from the test classpath")
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** `sha256sum` lines of the fixture directory: file name -> hex digest. */
+  private lazy val recordedSums: Map[String, String] =
+    new String(resource("SHA256SUMS"), "US-ASCII").split("\n").filter(_.nonEmpty).map { l =>
+      val Array(hex, name) = l.split("\\s+", 2)
+      name.stripPrefix("*") -> hex
+    }.toMap
+
+  /** Lines of the fixture `name`, after checking its bytes against the
+    * recorded sha256 (a fixture edited by hand fails here, not silently).
+    */
+  private def fixture(name: String): Vector[String] = {
+    val bytes = resource(name)
+    assert(recordedSums.get(name).contains(sha256(bytes)),
+      s"parity fixture $name does not match its sha256 in SHA256SUMS")
+    new String(bytes, "US-ASCII").split("\n").filter(_.nonEmpty).toVector
+  }
+
+  private def assertSame(what: String, want: Vector[String], ours: Vector[String]): Unit =
+    assert(ours == want,
+      s"$what: want=${want.size} ours=${ours.size} " +
+        s"missing=${(want.toSet -- ours.toSet).take(3)} extra=${(ours.toSet -- want.toSet).take(3)}")
+
+  /** `ours` (sorted) must equal fixture `name` and, when present, `ref`. */
+  private def assertParity(name: String, ours: Vector[String], ref: Option[Vector[String]]): Unit = {
+    assertSame(s"fixture $name", fixture(name), ours)
+    ref.foreach(assertSame(s"reference for $name", _, ours))
+    info(s"$name: ${ours.size} lines identical to the fixture" +
+      ref.fold(" (reference binary unavailable)")(_ => " and to the reference"))
+  }
+
+  private def writeCorpus(prefix: String, texts: Iterable[(Long, String)]): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    texts.foreach { case (id, t) => Files.write(dir.resolve(s"$id.txt"), t.getBytes("US-ASCII")) }
+    dir
+  }
+
+  private def sourceCorpus(n: Int) =
+    CorpusGen.sourceFilesWithIds(spark, n).select("doc_id", "content").cache()
+
+  private def ourLines(docs: org.apache.spark.sql.DataFrame, cfg: MinHashConfig): Vector[String] =
+    MinHashPipeline.goldenLines(MinHashPipeline.run(docs, cfg), cfg).toVector.sorted
+
   test("pair output identical to compiled reference on 400-doc corpus (recall 1.0)") {
-    assume(ensureBinary(), "reference binary unavailable")
     val n = 400
     val cfg = MinHashConfig(shingleSize = 3, signatureSize = 64, nBandRows = 4,
       seed = 13, threshold = 0.3)
-
     // corpus as both a DataFrame and the reference's <i>.txt directory
-    val docs = CorpusGen.sourceFilesWithIds(spark, n).select("doc_id", "content").cache()
-    val dir = java.nio.file.Files.createTempDirectory("refcmp")
-    docs.collect().foreach { r =>
-      java.nio.file.Files.write(
-        dir.resolve(s"${r.getLong(0)}.txt"),
-        r.getString(1).getBytes("US-ASCII"))
-    }
-
+    val docs = sourceCorpus(n)
+    val dir = writeCorpus("refcmp", docs.collect().map(r => (r.getLong(0), r.getString(1))))
     // ingest invariant: sha2(content) == sha256 of the .txt bytes
     assert(CorpusGen.ingestShaMismatches(docs, dir.toString) == 0)
-
-    // run the reference (writes results.csv into its cwd)
-    val work = java.nio.file.Files.createTempDirectory("refrun").toFile
-    val rc = Process(
-      Seq(bin, "-n", "1", "--docs", n.toString, "--offset", "0",
-        "--shingle", cfg.shingleSize.toString,
-        "--signature", cfg.signatureSize.toString,
-        "--bandrows", cfg.nBandRows.toString,
-        "--seed", cfg.seed.toString,
-        "--threshold", cfg.threshold.toString,
-        dir.toString + "/"),
-      work
-    ).!
-    assert(rc == 0, s"reference binary exited $rc")
-    val refLines = scala.io.Source
-      .fromFile(new java.io.File(work, "results.csv"))
-      .getLines()
-      .drop(1) // header
-      .toVector
-      .sorted
-
-    val ourLines = MinHashPipeline
-      .goldenLines(MinHashPipeline.run(docs, cfg), cfg)
-      .toVector
-      .sorted
-
-    assert(ourLines.nonEmpty, "pipeline produced no pairs — corpus should have planted dups")
-    val refSet = refLines.toSet
-    val ourSet = ourLines.toSet
-    val missing = refSet -- ourSet
-    val extra = ourSet -- refSet
-    assert(missing.isEmpty && extra.isEmpty,
-      s"recall=${(refSet.size - missing.size).toDouble / refSet.size} " +
-        s"missing=${missing.take(5)} extra=${extra.take(5)}")
-    info(s"reference pairs = ${refSet.size}, ours = ${ourSet.size}, identical")
+    val ours = ourLines(docs, cfg)
+    assert(ours.nonEmpty, "pipeline produced no pairs — corpus should have planted dups")
+    assertParity("source400_s3_sig64_t03.csv", ours, reference(dir, n, 0, cfg))
     docs.unpersist()
   }
 
   test("pair output identical at a second config + offset 1 (the reference workloads' shape)") {
-    assume(ensureBinary(), "reference binary unavailable")
     // all three pinned reference invocations pass --offset 1
     // (/root/reference/makefile:48-76): file ids start at 1, and the CSV
     // carries the offset ids. Replay that exactly: files written as
@@ -96,32 +135,16 @@ class ReferenceParitySpec extends SparkSpec {
     val n = 400
     val cfg = MinHashConfig(shingleSize = 2, signatureSize = 96, nBandRows = 3,
       seed = 7, threshold = 0.4, docOffset = 1L)
-    val docs = CorpusGen.sourceFilesWithIds(spark, n).select("doc_id", "content").cache()
-    val dir = java.nio.file.Files.createTempDirectory("refcmpB")
-    docs.collect().foreach { r =>
-      java.nio.file.Files.write(dir.resolve(s"${r.getLong(0) + 1}.txt"),
-        r.getString(1).getBytes("US-ASCII"))
-    }
-    val work = java.nio.file.Files.createTempDirectory("refrunB").toFile
-    val rc = Process(
-      Seq(bin, "-n", "1", "--docs", n.toString, "--offset", "1",
-        "--shingle", "2", "--signature", "96", "--bandrows", "3",
-        "--seed", "7", "--threshold", "0.4", dir.toString + "/"), work).!
-    assert(rc == 0)
-    val refLines = scala.io.Source.fromFile(new java.io.File(work, "results.csv"))
-      .getLines().drop(1).toVector.sorted
-    val ourLines = MinHashPipeline.goldenLines(MinHashPipeline.run(docs, cfg), cfg)
-      .toVector.sorted
-    assert(ourLines == refLines,
-      s"ref=${refLines.size} ours=${ourLines.size} " +
-        s"diff=${(refLines.toSet -- ourLines.toSet).take(3)} | ${(ourLines.toSet -- refLines.toSet).take(3)}")
+    val docs = sourceCorpus(n)
+    val dir = writeCorpus("refcmpB", docs.collect().map(r => (r.getLong(0) + 1, r.getString(1))))
+    val ours = ourLines(docs, cfg)
+    assertParity("source400_offset1_s2_sig96_t04.csv", ours, reference(dir, n, 1, cfg))
     // sanity: the offset really is in the ids (no pair names doc 0)
-    assert(!ourLines.exists(_.startsWith("0,")))
+    assert(!ours.exists(_.startsWith("0,")))
     docs.unpersist()
   }
 
   test("pair output identical on a punctuation/case/whitespace-hostile corpus") {
-    assume(ensureBinary(), "reference binary unavailable")
     // the keyword-soup corpus never exercises the tokenizer's normalization
     // edges END-TO-END vs the binary (unit golden vectors do, but this is
     // the stronger check): mixed case, intra-word punctuation, \t \v \f
@@ -130,7 +153,7 @@ class ReferenceParitySpec extends SparkSpec {
     val vocab = Array("Don't", "STOP-me", "qu1ck", "(brown)", "fox;", "jumps!",
       "over___the", "lazy", "DOG", "42", "times,", "C++", "a&b", "x=y+1;",
       "___", "!!!", "Hello,World", "tab\tsep", "mixedCASE", "0xDEADbeef")
-    val ws = Array(" ", "  ", "\t", "\n", "\r\n", "", "\f", " \t ")
+    val ws = Array(" ", "  ", "\t", "\n", "\r\n", "\u000b", "\f", " \t ")
     def doc(i: Int): String = {
       val rng = new java.util.Random(1234L + i)
       val sb = new StringBuilder
@@ -151,42 +174,27 @@ class ReferenceParitySpec extends SparkSpec {
           doc(i - 2).toUpperCase.replace(" ", "\t").replace("'", "@")
         case _ => doc(i)
       }
-    }
+    }.zipWithIndex.map { case (t, i) => (i.toLong, t) }
     val cfg = MinHashConfig(shingleSize = 3, signatureSize = 64, nBandRows = 4,
       seed = 13, threshold = 0.3)
     import spark.implicits._
-    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "content").cache()
-    val dir = java.nio.file.Files.createTempDirectory("refcmpN")
-    texts.zipWithIndex.foreach { case (t, i) =>
-      java.nio.file.Files.write(dir.resolve(s"$i.txt"), t.getBytes("US-ASCII"))
-    }
+    assert(texts.exists(_._2.contains('\u000b')), "corpus must carry vertical tabs")
+    val docs = texts.toDF("doc_id", "content").cache()
+    val dir = writeCorpus("refcmpN", texts)
     assert(CorpusGen.ingestShaMismatches(docs, dir.toString) == 0)
-    val work = java.nio.file.Files.createTempDirectory("refrunN").toFile
-    val rc = Process(
-      Seq(bin, "-n", "1", "--docs", n.toString, "--offset", "0",
-        "--shingle", "3", "--signature", "64", "--bandrows", "4",
-        "--seed", "13", "--threshold", "0.3", dir.toString + "/"), work).!
-    assert(rc == 0)
-    val refLines = scala.io.Source.fromFile(new java.io.File(work, "results.csv"))
-      .getLines().drop(1).toVector.sorted
-    val ourLines = MinHashPipeline.goldenLines(MinHashPipeline.run(docs, cfg), cfg)
-      .toVector.sorted
-    assert(ourLines.nonEmpty)
-    assert(ourLines == refLines,
-      s"ref=${refLines.size} ours=${ourLines.size} " +
-        s"diff=${(refLines.toSet -- ourLines.toSet).take(3)} | ${(ourLines.toSet -- refLines.toSet).take(3)}")
+    val ours = ourLines(docs, cfg)
+    assert(ours.nonEmpty)
+    assertParity("hostile60_s3_sig64_t03.csv", ours, reference(dir, n, 0, cfg))
     // the punctuation-variant plants really are exact dups after
     // normalization: their pair must appear with similarity 1.0000
     val variantPairs = (0 until n).filter(_ % 5 == 4).map(i => (i - 2, i))
     variantPairs.foreach { case (a, b) =>
-      assert(ourLines.contains(s"$a,$b,1.0000"), s"variant pair ($a,$b) not 1.0")
+      assert(ours.contains(s"$a,$b,1.0000"), s"variant pair ($a,$b) not 1.0")
     }
     docs.unpersist()
   }
 
   test("randomized differential fuzz: 3 random configs × random corpora, byte-identical") {
-    assume(ensureBinary(), "reference binary unavailable")
     // The pinned-config tests freeze known divergence classes; every round's
     // diff review has found a NEW edge (trim classes, `$` anchors, escape
     // processing) — seeded random (config, corpus) draws hunt the next one
@@ -217,71 +225,48 @@ class ReferenceParitySpec extends SparkSpec {
           case 3 => (id, "") // empty doc
           case _ => (id, t)
         }
-      }
-      val docs = texts.toSeq.toDF("doc_id", "content").cache()
-      val dir = java.nio.file.Files.createTempDirectory(s"reffuzz$trial")
-      texts.foreach { case (id, t) =>
-        java.nio.file.Files.write(dir.resolve(s"$id.txt"), t.getBytes("US-ASCII"))
-      }
+      }.toSeq
+      val docs = texts.toDF("doc_id", "content").cache()
+      val dir = writeCorpus(s"reffuzz$trial", texts)
       assert(CorpusGen.ingestShaMismatches(docs, dir.toString) == 0)
-      val work = java.nio.file.Files.createTempDirectory(s"reffuzzrun$trial").toFile
-      val rc = Process(
-        Seq(bin, "-n", "1", "--docs", texts.length.toString, "--offset", "0",
-          "--shingle", shingle.toString, "--signature", signature.toString,
-          "--bandrows", bandRows.toString, "--seed", seed.toString,
-          "--threshold", threshold.toString, dir.toString + "/"), work).!
-      assert(rc == 0, s"trial $trial: reference binary exited $rc (cfg=$cfg)")
-      val refLines = scala.io.Source.fromFile(new java.io.File(work, "results.csv"))
-        .getLines().drop(1).toVector.sorted
-      val ourLines = MinHashPipeline.goldenLines(MinHashPipeline.run(docs, cfg), cfg)
-        .toVector.sorted
-      assert(ourLines == refLines,
-        s"trial $trial DIVERGED cfg=$cfg n=${texts.length}: ref=${refLines.size} " +
-          s"ours=${ourLines.size} " +
-          s"diff=${(refLines.toSet -- ourLines.toSet).take(3)} | " +
-          s"${(ourLines.toSet -- refLines.toSet).take(3)}")
-      info(s"trial $trial: cfg=($shingle,$signature,$bandRows,$seed,$threshold) " +
-        s"n=${texts.length} pairs=${refLines.size} identical")
+      info(s"trial $trial: cfg=($shingle,$signature,$bandRows,$seed,$threshold) n=${texts.length}")
+      assertParity(s"fuzz_trial$trial.csv", ourLines(docs, cfg), reference(dir, texts.length, 0, cfg))
       docs.unpersist()
     }
   }
 
   test("cluster assignments match union-find over reference pairs (recall >= 0.99 rule)") {
-    assume(ensureBinary(), "reference binary unavailable")
     val n = 400
     val cfg = MinHashConfig(3, 64, 4, 13, 0.8)
-    val docs = CorpusGen.sourceFilesWithIds(spark, n).select("doc_id", "content").cache()
-    val dir = java.nio.file.Files.createTempDirectory("refcmp2")
-    docs.collect().foreach { r =>
-      java.nio.file.Files.write(dir.resolve(s"${r.getLong(0)}.txt"),
-        r.getString(1).getBytes("US-ASCII"))
-    }
-    val work = java.nio.file.Files.createTempDirectory("refrun2").toFile
-    val rc = Process(
-      Seq(bin, "-n", "1", "--docs", n.toString, "--offset", "0",
-        "--shingle", "3", "--signature", "64", "--bandrows", "4",
-        "--seed", "13", "--threshold", "0.8", dir.toString + "/"), work).!
-    assert(rc == 0)
+    val docs = sourceCorpus(n)
+    val dir = writeCorpus("refcmp2", docs.collect().map(r => (r.getLong(0), r.getString(1))))
+    val pairs = MinHashPipeline.run(docs, cfg)
+    val ref = reference(dir, n, 0, cfg)
+    // no pair of this corpus has similarity below 0.8, so the pair output
+    // at 0.8 is the same file as the first case's at 0.3
+    assertParity("source400_s3_sig64_t03.csv", MinHashPipeline.goldenLines(pairs, cfg).toVector.sorted, ref)
+
+    val ours = graft.operators.ConnectedComponents
+      .cluster(pairs, docs.select(col("doc_id")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val labelLines = ours.toVector.sortBy(_._1).map { case (d, l) => s"$d,$l" }
+    assertSame("fixture source400_s3_sig64_t08_clusters.csv",
+      fixture("source400_s3_sig64_t08_clusters.csv"), labelLines)
 
     // union-find over the reference's pairs
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
-    def union(a: Int, b: Int): Unit = {
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    scala.io.Source.fromFile(new java.io.File(work, "results.csv")).getLines().drop(1)
-      .foreach { line =>
+    ref.foreach { lines =>
+      val parent = Array.tabulate(n)(identity)
+      def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
+      def union(a: Int, b: Int): Unit = {
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      lines.foreach { line =>
         val p = line.split(",")
         union(p(0).toInt, p(1).toInt)
       }
-    val refClusters = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
-
-    val ours = graft.operators.ConnectedComponents
-      .cluster(MinHashPipeline.run(docs, cfg), docs.select(col("doc_id")))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    assert(ours == refClusters)
+      assert(ours == (0 until n).map(i => i.toLong -> find(i).toLong).toMap)
+    }
     docs.unpersist()
   }
 }
