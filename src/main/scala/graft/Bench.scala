@@ -79,25 +79,10 @@ object Bench {
   private def stampJson(s: (Long, Double, Double)): String =
     f"""[${s._1},${s._2}%.2f,${s._3}%.2f]"""
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      // 64 MB default task pages are humongous allocations for G1 at this
-      // heap size -> allocation-stall storms in hash aggs/joins (measured
-      // 10-20x slowdowns); 8 MB pages fix it (see BENCHMARKS.md)
-      .config("spark.buffer.pageSize", "8m")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    // ERROR, not WARN: the driver merges stderr into the text it tail-parses;
-    // shutdown-hook INFO/WARN lines must not land after the JSON line.
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // ERROR, not WARN: Bench's caller merges stderr into the text it tail-parses;
+  // shutdown-hook INFO/WARN lines must not land after the JSON line.
+  private def session(cores: Int): SparkSession =
+    Sessions.local(s"graft-bench-$cores", cores, logLevel = "ERROR")
 
   /** End-to-end dedup job (the north-rule metric): parquet scan ->
     * signatures -> LSH candidates -> similarity pairs -> clusters.
@@ -129,8 +114,7 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator
       .setRootLevel(org.apache.logging.log4j.Level.ERROR)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
+    val cpus = Sessions.cores()
     val scaleFiles = sys.env.getOrElse("SPARK_GRAFT_SCALE_FILES", "200000").toLong
     // Scaling protocol cores: N vs 4N, by default cpus/4 vs cpus, so the
     // high leg never asks for more threads than the machine has (a fixed

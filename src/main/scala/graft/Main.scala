@@ -110,34 +110,11 @@ object Main {
       "spark.master",
       sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")
     )
-    val spark = SparkSession
-      .builder()
-      .master(master)
-      .appName("graft-minhash-dedup")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.buffer.pageSize", "8m") // G1 humongous-alloc fix, see BENCHMARKS.md
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    if (opts.get("verbose").exists(_.toBoolean)) {
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            ev: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = ev.stageInfo
-          val sec = (for {
-            end <- si.completionTime; start <- si.submissionTime
-          } yield (end - start) / 1000.0).getOrElse(0.0)
-          System.err.println(
-            f"[graft] stage ${si.stageId}%3d done: tasks=${si.numTasks}%4d " +
-              f"in=${si.taskMetrics.inputMetrics.recordsRead}%9d recs " +
-              f"shuffleOut=${si.taskMetrics.shuffleWriteMetrics.recordsWritten}%9d recs " +
-              f"$sec%6.1fs  ${si.name.takeWhile(_ != '\n').take(80)}")
-        }
-      })
-    }
+    val spark = Sessions.start("graft-minhash-dedup", master,
+      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32").toInt,
+      logLevel = "WARN")
+    if (opts.get("verbose").exists(_.toBoolean))
+      graft.obs.Ledger.attach(spark.sparkContext, stageLines = true)
 
     // --stream <parquetDir>: the STREAMING engine on the CLI — incremental
     // dedup over micro-batches of (doc_id, content) parquet files landing

@@ -645,7 +645,7 @@ object SparkEntry {
         .orderBy("doc1", "doc2")),
     "q_embed_neardup" -> ((s, dir) =>
       // multiprobe defaults (12 tables, 8 bits): measured pair recall 0.94
-      // at cosine>=0.4 vs 0.20 without multiprobe (RecallProbe)
+      // at cosine>=0.4 vs 0.20 without multiprobe (`Probe recall`)
       Similarity.embeddingNearDupPairs(embeddings(s, dir), minCosine = 0.4, dim = 64)
         .orderBy("doc1", "doc2")),
 

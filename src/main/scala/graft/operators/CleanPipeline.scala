@@ -253,7 +253,7 @@ object CleanPipeline {
     // PII placeholders would distort the token/punct ratios, and feeding
     // the redact expression INTO withQualityColumns makes CollapseProject
     // inline the 3-regex chain into every quality column — measured 19.4 s
-    // fused vs 5.4 + 1.0 s sequenced on a 50k-doc corpus (CleanProbe). The
+    // fused vs 5.4 + 1.0 s sequenced on a 50k-doc corpus (`Probe clean-stages`). The
     // Gopher signal operators read the survivors from four join sides, so
     // the pre-gate frame is cached first (the self-join recompute edge).
     lazy val cQual = s"$cLine;mintok=${cfg.minTokens};maxpunct=${cfg.maxPunctRatio};" +

@@ -64,7 +64,7 @@ object ConnectedComponents {
     *                200k-file bench leg, almost all stage overhead).
     *                Driver cost at the 1M default (measured on 1M-edge
     *                chain and random graphs over 1M nodes, 2 GB heap,
-    *                local[2]): a peak of ~340 MB of live heap above the
+    *                2 local cores): a peak of ~340 MB of live heap above the
     *                baseline — the collected `Row`s, the boxed union-find
     *                maps and the label rows — and 3-5 s of wall; the
     *                returned frame keeps the ~100 MB of label rows alive

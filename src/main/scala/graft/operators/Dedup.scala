@@ -293,7 +293,8 @@ object Dedup {
         // propagation collapses that whole branch at runtime. The two
         // routes partition the exact pair set (SkewSpec asserts it vs
         // brute force; the exhaustive-Hamming DuckDB oracles replay the
-        // contract). Measured (HammingProbe, sf0.1): raw join 0.7 s vs
+        // contract). Measured (HammingProbe, sf0.1; probe removed, last at
+        // `4da72ea`): raw join 0.7 s vs
         // 1.1-1.5 s for any emitter-based pass; r7's eager decision job
         // alone was 0.3-0.6 s.
         require(bw <= 16,

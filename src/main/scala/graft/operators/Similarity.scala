@@ -346,7 +346,7 @@ object Similarity {
     * the shuffle is an equi-join on (table_idx, bucket) — never a cross
     * join, so it survives a 10^9-vector corpus.
     *
-    * Defaults tuned by sweep (graft.tools.RecallProbe, sf0.001/sf0.1
+    * Defaults tuned by sweep (`graft.tools.Probe recall`, sf0.001/sf0.1
     * recall@5 vs brute force): DIRECTED multiprobe (24, 8, T=4
     * lowest-margin flips) = 0.860/0.900 recall — above both the r2 blind
     * default (16,8,T=8): 0.847/0.893 and the probe-free (24,5): 0.867/0.904
@@ -610,7 +610,7 @@ object Similarity {
     * Sample-seeded refinement is the standard index-build trade (cf.
     * k-means|| initialization); refinement matters: hash-sampled seeds
     * give badly unbalanced lists (measured recall@5 0.73 at nProbe 8/16);
-    * Lloyd-balanced lists measure 0.886 at nProbe 10 (RecallProbe,
+    * Lloyd-balanced lists measure 0.886 at nProbe 10 (`Probe recall`,
     * BENCHMARKS.md). Complements the hyperplane-LSH variant: IVF adapts to
     * the data distribution (clustered embeddings), LSH is
     * distribution-free.
@@ -967,7 +967,7 @@ object Similarity {
     * shortlist + exact-cosine rerank of the shortlist.
     *
     * The 100 TB story — MEASURED, and the measurement overturned the
-    * naive byte claim (PqBytesProbe, BENCHMARKS.md round-7): on Spark,
+    * naive byte claim (`Probe pq-bytes`, BENCHMARKS.md round-7): on Spark,
     * [[ivfTopK]]'s FUSED shape (exact cosine + top-k agg consumed
     * pipelined inside the candidate-join stage — the scored rows never
     * cross the wire) shuffles FEWER bytes than PQ in BOTH regimes
@@ -1045,7 +1045,7 @@ object Similarity {
   }
 
   /** Driver-side exact cosine-threshold pairs over a small collected vector
-    * set — the oracle for recall tests and probes (RecallProbe,
+    * set — the oracle for recall tests and probes (`Probe recall`,
     * OperatorsSpec). O(n²); zero-norm vectors never match.
     */
   def exactCosinePairsLocal(vecs: Array[(Long, Array[Double])],
@@ -1090,7 +1090,7 @@ object Similarity {
     // multiprobe matters MORE here than for top-k: near-dup thresholds like
     // cosine 0.4 are far pairs (per-hyperplane agreement ~0.63), where exact
     // bucket collision is rare (p^bits) — measured recall 0.20 without
-    // multiprobe vs 0.94 with, at identical table count (RecallProbe).
+    // multiprobe vs 0.94 with, at identical table count (`Probe recall`).
     // Default nProbes = bandBits (all flips = blind Hamming-1 probing):
     // far pairs don't concentrate their disagreements in the low-margin
     // bits the way near neighbors do, so the full fan earns its cost here.

@@ -529,7 +529,7 @@ object StreamingDedup {
     * batch-bounded) cuts the remainder before the pairs shuffle. Without
     * this the join scanned + shuffled O(history) signature rows per batch.
     *
-    * Package-private so StreamingDedupSpec/StreamProbe drive the EXACT
+    * Package-private so StreamingDedupSpec drives the EXACT
     * production expression to assert scanned rows << history rows. Callers
     * must hold the raised inFilterThreshold conf (processBatch does) or the
     * >10-value isin is demoted to a useless min/max range at pushdown.
@@ -598,7 +598,7 @@ object StreamingDedup {
     *     compact's dropDuplicates) — the safe direction.
     *
     * MUST run while the stream is quiesced (between start()/termination,
-    * as tests and StreamProbe do, or with the query stopped): an in-flight
+    * as tests and `Probe stream` do, or with the query stopped): an in-flight
     * processBatch that already listed the source dirs would hit
     * FileNotFoundException when they are deleted under it. That rule is
     * ENFORCED, not conventional: compact takes `_compact_lock` for its whole

@@ -239,7 +239,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("lshTopK recall vs brute force on real embeddings >= 0.85 (tuned defaults)") {
-    // tuned via graft.tools.RecallProbe sweep: DIRECTED-multiprobe defaults
+    // tuned via `graft.tools.Probe recall` sweep: DIRECTED-multiprobe defaults
     // (nTables=24, bandBits=8, T=4 lowest-margin flips) measure recall@5 =
     // 0.860 on this corpus (0.900 at sf0.1) at lower candidate volume than
     // either the blind-probe or probe-free alternative

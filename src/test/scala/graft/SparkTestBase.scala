@@ -7,19 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * single test JVM reuses it; Spark re-getOrCreate's the same session).
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.buffer.pageSize", "8m") // G1 humongous-alloc fix, see BENCHMARKS.md
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local("graft-test", cores = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
