@@ -5,6 +5,8 @@ import graft.operators.{ConnectedComponents, MinHashPipeline}
 import graft.sources.CorpusGen
 import org.apache.spark.sql.SparkSession
 
+import scala.util.control.NonFatal
+
 /** Per-round benchmark main. Prints ONE JSON line (and nothing else on
   * stdout — Spark logging is forced to ERROR and build.sbt routes forked
   * output raw, so the driver's tail-parse sees the JSON as the literal
@@ -136,7 +138,7 @@ object Bench {
     headline.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
         try { fn(sparkAll, warmSf).count(); () }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(e) => System.err.println(s"[bench] warm $name: $e") }
       }
     }
     sparkAll.catalog.clearCache()

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.core.{Murmur2, Tokenizer}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The deduplication operator family a training-data pipeline needs, beyond
@@ -206,35 +207,16 @@ object Dedup {
     * agnostic core behind [[simHashPairs]] (text) and
     * Multimodal.image/audio/videoNearDupPairs (perceptual hashes).
     *
-    * Skew armor (round 7 closed the r6 scale gap; round 8 made it lazy and
-    * single-exchange): a class of B IDENTICAL fingerprints
-    * (blank/monochrome images, silence audio, empty docs) is B block-join
-    * hits on ONE (block_idx, block_val) key per block — a raw self-join
-    * generates its B²/2 rows in one task. Pair generation therefore rides
-    * the same machinery as MinHashPipeline.candidates:
-    *   - default (`starCapGroupSize = None`): DATA-ROUTED exact pairs in
-    *     one exchange — the block table is repartitioned on the group key
-    *     once, group sizes derive in-partition (no second exchange, no
-    *     eager decision job — r7 ran a blocking two-job proof at frame
-    *     construction), and each group routes by its own size: <= chunk
-    *     streams its clique from the sorted emitter (per-task output
-    *     bounded by saltChunkSize² structurally), > chunk replicates to
-    *     s = ceil(B/chunk) hash-salted chunk-PAIR groups that emit across
-    *     many tasks (BucketPairs.emitChunkPairs; the mega exchange carries
-    *     only mega-group rows and is empty on healthy corpora). The two
-    *     routes partition the exact pair set (the exhaustive-Hamming
-    *     DuckDB oracles replay this contract verbatim); only the per-group
-    *     ROUTE changes with the data. The output volume itself stays
-    *     quadratic per identical-fingerprint class BY CONTRACT — cap it
-    *     semantically with `starCapGroupSize` or drop degenerate
-    *     fingerprints upstream (Multimodal's near-dup operators exclude
-    *     the undecodable sentinel 0 for exactly this reason).
-    *   - `starCapGroupSize = Some(cap)`: block groups larger than cap emit
-    *     hub-star pairs only (hub = min id) — cluster-preserving linear
-    *     output, the production profile for dedup-survivor selection
-    *     (exactly MinHashPipeline's star-cap contract).
-    * Candidate ids-only through the pair shuffle; hashes join back once per
-    * side for the exact Hamming filter (the lshTopK ids-only lesson).
+    * The block rows (block_idx, block_val, doc_id) go through
+    * [[GroupPairs]]: a class of B IDENTICAL fingerprints (blank/monochrome
+    * images, silence audio, empty docs) is one B-member group per block,
+    * generated across salted chunk-pair tasks (default
+    * `starCapGroupSize = None`, the exact relation; its volume stays
+    * quadratic per identical class BY CONTRACT — Multimodal's near-dup
+    * operators exclude the undecodable sentinel 0 for this reason) or as a
+    * hub-star (`starCapGroupSize = Some(cap)`, MinHashPipeline's star-cap
+    * contract). Candidate ids travel through the pair shuffle; hashes join
+    * back once per side for the exact Hamming filter.
     *
     * The input frame feeds the block explode AND both hash join-backs —
     * the CALLER persists it (repo-wide kernel-cache contract; simHashPairs
@@ -249,87 +231,18 @@ object Dedup {
       "nBlocks must divide 64 and be >= 2 (block values must fit the two-int emitter key)")
     require(maxHamming < nBlocks,
       s"$nBlocks-block pigeonhole guarantees recall only for maxHamming < $nBlocks")
-    require(saltChunkSize > 1, "saltChunkSize must exceed 1")
-    val spark = hashes.sparkSession
-    import spark.implicits._
     val bw = 64 / nBlocks
-    val mask = (1L << bw) - 1L
-    // emitter key = (block_idx, block_val truncated to int) — injective for
-    // bw <= 32 (nBlocks >= 2, required above)
+    // block b sign-extended from its bw bits: an injective long in int
+    // range for bw <= 32, so the int cast cannot overflow under ANSI
     val blocks = hashes.select(
         col(idCol).cast("long").as("doc_id"),
-        posexplode(
-          array((0 until nBlocks).map(b =>
-            shiftright(col(hashCol), b * bw).bitwiseAND(lit(mask))): _*)
-        ).as(Seq("block_idx", "block_val")))
-      .select(col("block_idx").cast("int"), col("block_val").cast("int"),
-        col("doc_id"))
-    val candIds = starCapGroupSize match {
-      case Some(cap) =>
-        blocks.repartition(col("block_idx"), col("block_val"))
-          .as[(Int, Int, Long)]
-          .sortWithinPartitions("block_idx", "block_val", "doc_id")
-          .mapPartitions(rows => graft.core.BucketPairs.emit(rows, cap))
-          .toDF("doc1", "doc2")
-      case None =>
-        // Data-routed pair generation (round 8, replacing round 7's eager
-        // two-job adaptive decision with a LAZY broadcast route — building
-        // the frame runs no job again, EntrySpec's plan-only contract holds
-        // for the Hamming family). The (block_idx, block_val) key space is
-        // BOUNDED: nBlocks × 2^(64/nBlocks) keys (nBlocks ≥ 4 — required
-        // just below — gives ≤ 2^18 keys at any corpus size), so the
-        // oversized-group key set is always broadcastable. The group-size
-        // aggregate (partial-agg combined, its exchange carries only
-        // distinct keys) feeds a broadcast of the > saltChunkSize keys;
-        // the codegen'd raw self-join then runs over only the anti-joined
-        // (proven-small) rows — its largest per-key task is bounded by
-        // saltChunkSize² pairs STRUCTURALLY, no proof job, no
-        // decision-vs-pair-job read race on an un-persisted input — while
-        // ONLY the mega-group rows (not the whole table as in r7) take the
-        // chunk-salted pass: members replicate to their s = ceil(B/chunk)
-        // chunk-PAIR groups (ci, cj) whose exchange spreads a B²/2 clique
-        // over s² tasks, <= 2 chunks of ids buffered per task. On healthy
-        // corpora the mega side is EMPTY and AQE's empty-relation
-        // propagation collapses that whole branch at runtime. The two
-        // routes partition the exact pair set (SkewSpec asserts it vs
-        // brute force; the exhaustive-Hamming DuckDB oracles replay the
-        // contract). Measured (HammingProbe, sf0.1; probe removed, last at
-        // `4da72ea`): raw join 0.7 s vs
-        // 1.1-1.5 s for any emitter-based pass; r7's eager decision job
-        // alone was 0.3-0.6 s.
-        require(bw <= 16,
-          "hammingPairs64 exact mode routes skew via a broadcast of the " +
-            "bounded (block_idx, block_val) key space — nBlocks must be >= 4")
-        val megaSizes = broadcast(
-          blocks.groupBy("block_idx", "block_val").agg(count(lit(1)).as("bn"))
-            .filter(col("bn") > saltChunkSize))
-        val small = blocks.join(megaSizes.select("block_idx", "block_val"),
-          Seq("block_idx", "block_val"), "left_anti")
-        val smallPairs = small.as("l").join(small.as("r"), Seq("block_idx", "block_val"))
-          .filter(col("l.doc_id") < col("r.doc_id"))
-          .select(col("l.doc_id").as("doc1"), col("r.doc_id").as("doc2"))
-        val megaPairs = blocks.join(megaSizes, Seq("block_idx", "block_val"))
-          .withColumn("s", ceil(col("bn").cast("double") / saltChunkSize).cast("int"))
-          .withColumn("chunk", pmod(xxhash64(col("doc_id")), col("s")).cast("int"))
-          .select(col("block_idx"), col("block_val"), col("doc_id"), col("s"), col("chunk"))
-          .as[(Int, Int, Long, Int, Int)]
-          .flatMap { case (bi, bv, doc, sN, chunk) =>
-            // replicate to every chunk-pair group containing this chunk
-            (0 until sN).iterator.map { other =>
-              (bi, bv, math.min(chunk, other), math.max(chunk, other), doc, chunk)
-            }
-          }
-          .toDF("block_idx", "block_val", "ci", "cj", "doc_id", "chunk")
-          .repartition(col("block_idx"), col("block_val"), col("ci"), col("cj"))
-          .sortWithinPartitions("block_idx", "block_val", "ci", "cj", "doc_id")
-          .as[(Int, Int, Int, Int, Long, Int)]
-          .mapPartitions(rows => graft.core.BucketPairs.emitChunkPairs(rows))
-          .toDF("doc1", "doc2")
-        smallPairs.union(megaPairs)
-    }
+        posexplode(array((0 until nBlocks).map(b =>
+          shiftright(shiftleft(col(hashCol), 64 - (b + 1) * bw), 64 - bw)): _*))
+          .as(Seq("block_idx", "block_val")))
+      .select(col("block_idx"), col("block_val").cast("int"), col("doc_id"))
     val h1 = hashes.select(col(idCol).cast("long").as("doc1"), col(hashCol).as("_h1"))
     val h2 = hashes.select(col(idCol).cast("long").as("doc2"), col(hashCol).as("_h2"))
-    candIds
+    GroupPairs(blocks, starCapGroupSize, saltChunkSize)
       .distinct()
       .join(h1, "doc1")
       .join(h2, "doc2")
@@ -354,19 +267,13 @@ object Dedup {
     * n_shared_windows counting DISTINCT window hashes present in both
     * docs, for callers that demand the exact shared-window relation.
     *
-    * Skew shape: pair generation reuses the salted-clique machinery of
-    * MinHashPipeline's parity mode (the 64-bit window hash split into the
-    * streaming emitters' two-int key). Window groups up to `saltChunkSize`
-    * stream their exact clique from the sorted pass (memory O(group), no
-    * self-join); larger groups are split into hash-salted chunks whose
-    * chunk-PAIR groups emit across many tasks — a window at a raised cap
-    * no longer lands its whole ~wdf²/2 output on one key's task. Each
-    * shared window still emits every pair exactly once (within-chunk
-    * cliques + cross-chunk products partition the clique), so the count
-    * mode's per-pair relation is exact. The output volume itself remains
-    * quadratic per window by contract — the doc-freq cap IS the pair
-    * budget (default 100 ≈ 5k pairs per hot window); raise it only with a
-    * measured budget, or pre-drop boilerplate with exact dedup first.
+    * Pair generation is [[GroupPairs]] over the window rows (the 64-bit
+    * window hash split into its two-int key): every shared window emits
+    * each pair exactly once, so count mode counts output rows per pair.
+    * The volume stays quadratic per window by contract — the doc-freq cap
+    * IS the pair budget (default 100 ≈ 5k pairs per hot window); raise it
+    * only with a measured budget, or pre-drop boilerplate with exact dedup
+    * first.
     */
   def substringDupPairs(docs: DataFrame, minTokens: Int,
                         idCol: String = "doc_id", textCol: String = "text",
@@ -393,44 +300,20 @@ object Dedup {
         }
       }
       .toDF("whi", "wlo", "doc_id")
-      // pre-partitioned by the window key, then persisted: the doc-freq
-      // agg and both emitter passes are window-keyed — one shuffle
-      // building the cache serves all consumers
+      // hot-window cap: a window shared by >maxWindowDocFreq docs
+      // (boilerplate) adds candidates quadratically but no discrimination —
+      // standard drop. The window count reuses the key partitioning, no
+      // second exchange (q_substring_dup at sf0.1, `Probe queries`: an
+      // aggregate joined back ran ~1.7x slower; no repartition before the
+      // cache shuffled 6x the bytes, 155 vs 25 MiB)
       .repartition(col("whi"), col("wlo"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // hot-window cap: a window shared by >maxWindowDocFreq docs (boilerplate)
-    // adds candidates quadratically but no discrimination — standard drop.
-    // groupBy reuses the cache's partitioning (no second exchange).
-    val sizes = windows.groupBy("whi", "wlo").agg(count(lit(1)).as("wdf"))
+      .withColumn("wdf", count(lit(1)).over(Window.partitionBy("whi", "wlo")))
       .filter(col("wdf") <= maxWindowDocFreq)
-    val small = windows
-      .join(sizes.filter(col("wdf") <= saltChunkSize), Seq("whi", "wlo"), "left_semi")
-      .select(col("whi"), col("wlo"), col("doc_id"))
-      .repartition(col("whi"), col("wlo"))
-      .sortWithinPartitions("whi", "wlo", "doc_id")
-      .as[(Int, Int, Long)]
-      .mapPartitions(rows => graft.core.BucketPairs.emit(rows, Int.MaxValue))
-      .toDF("doc1", "doc2")
-    val big = windows
-      .join(sizes.filter(col("wdf") > saltChunkSize), Seq("whi", "wlo"))
-      .withColumn("s", ceil(col("wdf").cast("double") / saltChunkSize).cast("int"))
-      .withColumn("chunk", pmod(xxhash64(col("doc_id")), col("s")).cast("int"))
-      .select(col("whi"), col("wlo"), col("doc_id"), col("s"), col("chunk"))
-      .as[(Int, Int, Long, Int, Int)]
-      .flatMap { case (whi, wlo, doc, s, chunk) =>
-        (0 until s).iterator.map { other =>
-          (whi, wlo, math.min(chunk, other), math.max(chunk, other), doc, chunk)
-        }
-      }
-      .toDF("whi", "wlo", "ci", "cj", "doc_id", "chunk")
-      .repartition(col("whi"), col("wlo"), col("ci"), col("cj"))
-      .sortWithinPartitions("whi", "wlo", "ci", "cj", "doc_id")
-      .as[(Int, Int, Int, Int, Long, Int)]
-      .mapPartitions(rows => graft.core.BucketPairs.emitChunkPairs(rows))
-      .toDF("doc1", "doc2")
-    val joined = small.union(big)
-    if (existsMode) joined.distinct()
-    else joined.groupBy("doc1", "doc2").agg(count(lit(1)).as("n_shared_windows"))
+      .select("whi", "wlo", "doc_id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairs = GroupPairs(windows, None, saltChunkSize)
+    if (existsMode) pairs.distinct()
+    else pairs.groupBy("doc1", "doc2").agg(count(lit(1)).as("n_shared_windows"))
   }
 
   /** Benchmark decontamination: for every (training doc, benchmark doc)

@@ -62,106 +62,33 @@ object MinHashPipeline {
   def bandBuckets(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
 
-  /** Stage B: candidate pairs from LSH buckets — ONE shuffle.
-    *
-    * repartition on (band_idx, band_hash) + sortWithinPartitions brings
-    * each bucket's members together in doc_id order; a streaming
-    * mapPartitions emitter ([[graft.core.BucketPairs]]) then yields the
-    * intra-bucket pairs with bounded memory. `distinct` implements the
-    * reference's ∃-band semantics (a pair colliding in several bands is
-    * emitted once, SURVEY.md Q5).
-    *
-    * This replaces the naive bucket-stats + join-back + self-join plan
-    * (4 shuffles, and the un-persisted subtree recomputed per join side)
-    * with repartition+sort+flatMap+distinct — measured ~3x faster at 200k
-    * docs and shuffle-volume-optimal at cluster scale.
+  /** Stage B: candidate pairs from LSH buckets: the band rows
+    * (band_idx, band_hash, doc_id) through [[GroupPairs]], then `distinct`
+    * for the reference's ∃-band semantics (a pair colliding in several
+    * bands is emitted once, SURVEY.md Q5). One exchange on the bucket key
+    * plus the distinct's in star mode; parity mode adds the size
+    * aggregate's exchange and the salted chunk-pair exchange, which is
+    * empty unless a bucket exceeds `saltChunkSize`.
     *
     * @param starCapBucketSize buckets larger than this emit hub-star pairs
     *   (min_doc, member) instead of the full clique — cluster-preserving
     *   skew armor (output linear, not quadratic, in bucket size). None =
     *   exact reference parity (full clique, quadratic in the bucket).
-    * @param candidatePartitions per-STAGE width of the bucket-key shuffle
+    * @param candidatePartitions per-STAGE width of the bucket-key shuffles
     *   (the pipeline's big exchange). Inherits spark.sql.shuffle.partitions
     *   when None — right for a single-job session, wrong at 100 TB where
     *   the exploded-bands stage wants many times the width of the final
-    *   aggregations; this overrides just this exchange, leaving the
+    *   aggregations; this overrides just these exchanges, leaving the
     *   session conf to the other stages. (The distinct's exchange stays
     *   conf-sized; AQE coalesces it by output volume.)
     */
   def candidates(sigs: DataFrame, starCapBucketSize: Option[Int] = None,
                  saltChunkSize: Int = 2048,
                  candidatePartitions: Option[Int] = None): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    def byKeys(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
-      candidatePartitions match {
-        case Some(n) => df.repartition(n, cols: _*)
-        case None    => df.repartition(cols: _*)
-      }
     val buckets = bandBuckets(sigs)
       .select(col("band_idx").cast("int"), col("band_hash").cast("int"),
         col("doc_id").cast("long"))
-    starCapBucketSize match {
-      case Some(cap) =>
-        byKeys(buckets, col("band_idx"), col("band_hash"))
-          .as[(Int, Int, Long)]
-          .sortWithinPartitions("band_idx", "band_hash", "doc_id")
-          .mapPartitions(rows => graft.core.BucketPairs.emit(rows, cap))
-          .toDF("doc1", "doc2")
-          .distinct()
-      case None =>
-        // Parity mode: the FULL clique of every bucket (reference
-        // semantics), with explicit salting so a mega-bucket's B² pairs are
-        // generated by many tasks, not one. ONE exchange of the exploded
-        // bucket table (round 8 — the r7 shape shuffled/recomputed the
-        // explode three times: the sizes agg plus one byKeys exchange per
-        // branch, and the concurrent leaf stages raced to build the
-        // signatures cache, duplicating the kernel; measured in the r8
-        // stage ledger as two ~6 CPU-s explode stages per run): repartition
-        // the explode FIRST, then derive the group sizes (agg preserves the
-        // (band_idx, band_hash) hash partitioning — no second exchange) and
-        // join them back in-partition. Buckets <= saltChunkSize stream
-        // their clique from the sorted emitter; larger buckets split into
-        // s = ceil(B / chunk) hash-salted chunks, every member replicated
-        // to its s chunk-PAIR groups (ci, cj), and a second sorted pass
-        // (over ONLY the mega-bucket rows — empty on healthy corpora, AQE
-        // propagates the empty branch) emits cross/within-chunk pairs with
-        // <= 2*chunk ids buffered per task. Union is the exact clique,
-        // deduped by the final distinct (which parity mode needs anyway
-        // for ∃-band).
-        val parted = byKeys(buckets, col("band_idx"), col("band_hash"))
-        val sizes = parted.groupBy("band_idx", "band_hash").agg(count(lit(1)).as("bn"))
-        val sized = parted.join(sizes, Seq("band_idx", "band_hash"))
-        val smallPairs = sized.filter(col("bn") <= saltChunkSize)
-          .select(col("band_idx"), col("band_hash"), col("doc_id"))
-          .sortWithinPartitions("band_idx", "band_hash", "doc_id")
-          .as[(Int, Int, Long)]
-          .mapPartitions(rows => graft.core.BucketPairs.emit(rows, Int.MaxValue))
-          .toDF("doc1", "doc2")
-        val big = sized.filter(col("bn") > saltChunkSize)
-          .withColumn("s", ceil(col("bn").cast("double") / saltChunkSize).cast("int"))
-          .withColumn("chunk", pmod(xxhash64(col("doc_id")), col("s")).cast("int"))
-        val bigPairs = byKeys(big
-          .select(col("band_idx"), col("band_hash"), col("doc_id"), col("s"), col("chunk"))
-          .as[(Int, Int, Long, Int, Int)]
-          .flatMap { case (bi, bh, doc, s, chunk) =>
-            // replicate to every chunk-pair group containing this chunk
-            (0 until s).iterator.map { other =>
-              val ci = math.min(chunk, other)
-              val cj = math.max(chunk, other)
-              (bi, bh, ci, cj, doc, chunk)
-            }
-          }
-          .toDF("band_idx", "band_hash", "ci", "cj", "doc_id", "chunk"),
-          col("band_idx"), col("band_hash"), col("ci"), col("cj"))
-          .sortWithinPartitions("band_idx", "band_hash", "ci", "cj", "doc_id")
-          .select(col("band_idx"), col("band_hash"), col("ci"), col("cj"),
-            col("doc_id"), col("chunk"))
-          .as[(Int, Int, Int, Int, Long, Int)]
-          .mapPartitions(rows => graft.core.BucketPairs.emitChunkPairs(rows))
-          .toDF("doc1", "doc2")
-        smallPairs.union(bigPairs).distinct()
-    }
+    GroupPairs(buckets, starCapBucketSize, saltChunkSize, candidatePartitions).distinct()
   }
 
   /** Stage C: similarity estimate + threshold. Joins candidates back to the

@@ -32,27 +32,69 @@ class SkewSpec extends SparkSpec {
     // collisions, multi-band hits, and mega-buckets, exercising the whole
     // bucket-join plan (positional band_idx semantics, ∃-band distinct,
     // and the salted chunk-pair path) against the reference's gate
-    // (is_candidate_pair, /root/reference/src/MPI/utils.c:89-96)
-    val rng = new scala.util.Random(99)
-    val n = 120
-    val nBands = 6
-    val rows = (0 until n).map { i =>
-      (i.toLong, Array.fill(8)(rng.nextInt()), Array.fill(nBands)(rng.nextInt(8)))
+    // (is_candidate_pair in its src/MPI/utils.c:89-96). The
+    // second input's domain of 24 puts buckets under, at and over the
+    // chunk size of 5, so both routes run in one plan.
+    for ((seed, domain, chunk) <- Seq((99, 8, 4), (5, 24, 5))) {
+      val rng = new scala.util.Random(seed)
+      val n = 120
+      val nBands = 6
+      val rows = (0 until n).map { i =>
+        (i.toLong, Array.fill(8)(rng.nextInt()), Array.fill(nBands)(rng.nextInt(domain)))
+      }
+      val sizes = (0 until nBands).flatMap(b => rows.groupBy(_._3(b)).values.map(_.length))
+      assert(sizes.max > chunk &&
+        (seed == 99 || (sizes.exists(_ < chunk) && sizes.contains(chunk))), sizes.sorted)
+      val sigs = rows.toDF("doc_id", "signature", "bands")
+      val expected = (for {
+        i <- 0 until n; j <- (i + 1) until n
+        if (0 until nBands).exists(b => rows(i)._3(b) == rows(j)._3(b))
+      } yield (i.toLong, j.toLong)).toSet
+      assert(expected.nonEmpty && expected.size < n * (n - 1) / 2) // non-trivial
+      val plain = MinHashPipeline.candidates(sigs)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(plain == expected,
+        s"seed=$seed plain: missing=${(expected -- plain).take(3)} extra=${(plain -- expected).take(3)}")
+      // salted path forced onto the buckets larger than the chunk size
+      val salted = MinHashPipeline.candidates(sigs, None, saltChunkSize = chunk)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(salted == expected, s"seed=$seed salted")
     }
-    val sigs = rows.toDF("doc_id", "signature", "bands")
-    val expected = (for {
-      i <- 0 until n; j <- (i + 1) until n
-      if (0 until nBands).exists(b => rows(i)._3(b) == rows(j)._3(b))
-    } yield (i.toLong, j.toLong)).toSet
-    assert(expected.nonEmpty && expected.size < n * (n - 1) / 2) // non-trivial
-    val plain = MinHashPipeline.candidates(sigs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(plain == expected,
-      s"plain: missing=${(expected -- plain).take(3)} extra=${(plain -- expected).take(3)}")
-    // salted path forced onto every bucket (chunk size 4 << bucket sizes)
-    val salted = MinHashPipeline.candidates(sigs, None, saltChunkSize = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(salted == expected)
+  }
+
+  test("GroupPairs: one (min, max) pair per shared group in exact mode, the hub-star in star mode") {
+    // random keyed tables: groups of 1-11 members around a chunk/cap of 4,
+    // drawn from 40 docs so that many doc pairs share several groups;
+    // negative keys and a custom exchange width ride along
+    val chunk = 4
+    def pairsOf(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Int] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(identity)
+        .map { case (p, ps) => p -> ps.length }
+    for (seed <- Seq(3, 17, 29)) {
+      val rng = new scala.util.Random(seed)
+      val groups = (0 until 30).map { g =>
+        val key = (rng.nextInt(3), rng.nextInt(2000) + (g - 15) * 2000)
+        val size = Seq(1, chunk - 1, chunk, chunk + 1, 2 * chunk + 1, 11)(rng.nextInt(6))
+        key -> rng.shuffle((0L until 40L).toList).take(size).sorted
+      }
+      val keyed = groups.flatMap { case ((a, b), docs) => docs.map(d => (a, b, d)) }
+        .toDF("ka", "kb", "member").repartition(5)
+      val clique = groups.flatMap { case (_, d) =>
+        for (i <- d.indices; j <- (i + 1) until d.length) yield (d(i), d(j))
+      }.groupBy(identity).map { case (p, ps) => p -> ps.length }
+      val star = groups.flatMap { case (_, d) =>
+        if (d.length <= chunk) for (i <- d.indices; j <- (i + 1) until d.length) yield (d(i), d(j))
+        else d.tail.map(m => (d.head, m))
+      }.groupBy(identity).map { case (p, ps) => p -> ps.length }
+      assert(clique.values.exists(_ > 1), "some pair must share several groups")
+      val exact = pairsOf(graft.operators.GroupPairs(keyed, None, chunk))
+      assert(exact == clique, s"seed=$seed exact: missing=${(clique.toSet -- exact.toSet).take(3)} " +
+        s"extra=${(exact.toSet -- clique.toSet).take(3)}")
+      assert(pairsOf(graft.operators.GroupPairs(keyed, None, chunk, Some(3))) == clique,
+        s"seed=$seed exact, width 3")
+      assert(pairsOf(graft.operators.GroupPairs(keyed, Some(chunk), chunk)) == star,
+        s"seed=$seed star")
+    }
   }
 
   test("star-cap mode: linear pair count, full clique still one cluster") {
@@ -148,12 +190,11 @@ class SkewSpec extends SparkSpec {
   }
 
   test("hammingPairs64 adaptive boundary: cliques straddling saltChunkSize, identical relation either shape") {
-    // round-7 adaptive decision: ANY (block_idx, block_val) group larger
-    // than saltChunkSize flips the plan from the raw codegen self-join to
-    // the fused chunk-salted pass. Property-test the boundary — identical
-    // cliques of size cap-1 / cap (raw-join shape) and cap+1 / 2cap+1
-    // (salted shape) over a random tail must all reproduce the exhaustive
-    // Hamming relation exactly.
+    // a (block_idx, block_val) group larger than saltChunkSize takes the
+    // chunk-salted route, a smaller one the sorted emitter. Property-test
+    // the boundary — identical cliques of size cap-1 / cap (sorted route)
+    // and cap+1 / 2cap+1 (salted route) over a random tail must all
+    // reproduce the exhaustive Hamming relation exactly.
     val rng = new scala.util.Random(97)
     for (cliqueSize <- Seq(7, 8, 9, 17)) {
       val hs = (0 until cliqueSize).map(i => (i.toLong, 0x5a5a3c3ca5a5c3c3L)) ++
@@ -177,5 +218,35 @@ class SkewSpec extends SparkSpec {
         s"missing=${(brute.keySet -- got.keySet).take(3)} extra=${(got.keySet -- brute.keySet).take(3)}")
       df.unpersist()
     }
+  }
+
+  test("hammingPairs64 with 32-bit blocks: top-bit blocks pair exactly in exact and star modes") {
+    // nBlocks = 2 makes each block a full 32-bit value; both blocks of the
+    // base below have their top bit set, so a block key must reach int
+    // range without an overflowing cast (ANSI casts throw on overflow)
+    val base = 0xf0e1d2c3b4a59687L
+    val rng = new scala.util.Random(53)
+    val hs = (0 until 50).map { i =>
+      val flips = if (i < 6) 0 else rng.nextInt(3)
+      var h = if (i % 7 == 3) ~base else base
+      (0 until flips).foreach(_ => h ^= (1L << rng.nextInt(64)))
+      (i.toLong, h)
+    }
+    val brute = (for {
+      i <- hs.indices; j <- (i + 1) until hs.length
+      ham = java.lang.Long.bitCount(hs(i)._2 ^ hs(j)._2)
+      if ham <= 1
+    } yield ((hs(i)._1, hs(j)._1), ham)).toMap
+    assert(brute.size > 6 * 5 / 2 && brute.values.exists(_ == 1))
+    val df = hs.toDF("doc_id", "simhash").repartition(4).cache()
+    def run(star: Option[Int]) = graft.operators.Dedup.hammingPairs64(df, maxHamming = 1,
+        nBlocks = 2, starCapGroupSize = star, saltChunkSize = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    val exact = run(None)
+    assert(exact == brute,
+      s"missing=${(brute.keySet -- exact.keySet).take(3)} extra=${(exact.keySet -- brute.keySet).take(3)}")
+    // a star cap above every block group's size keeps the full relation
+    assert(run(Some(hs.length)) == brute)
+    df.unpersist()
   }
 }
